@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{HashFns, TextFns}
@@ -326,8 +327,7 @@ object QueriesSimilarity {
     s"${dotSql(a, b)} / (${normSql(a)} * ${normSql(b)})"
 
   /** Banded-LSH kNN-3 edge list over `embeddings` — the SCALE-PATH
-    * edge builder the `_lsh` graph twins (q_graph_pagerank_lsh,
-    * q_graph_kcore_lsh) run on, assembled from the SAME certified
+    * edge builder of the `_lsh` graph face, assembled from the SAME certified
     * multi-probe sign-bit machinery as q_sim_embedding_neardup:
     * adaptive bucket width (expected bucket size ~32 at every corpus
     * size, so candidate volume stays O(n · probes · 32), linear in n),
@@ -340,8 +340,7 @@ object QueriesSimilarity {
     * Corpus count read once for the width (parquet row-count, no data
     * scan — the q_sim_embedding_neardup two-phase convention).
     */
-  private def lshKnnEdges(s: org.apache.spark.sql.SparkSession,
-                          d: String): org.apache.spark.sql.DataFrame = {
+  private def lshKnnEdges(s: SparkSession, d: String): DataFrame = {
     // embeddingsSpread was MEASURED here in r16 and reverted: it
     // helped clustering_coeff_lsh (4.87 -> 4.09 s) but regressed the
     // other four _lsh twins (triangles 3.10 -> 3.57, label_prop
@@ -380,8 +379,7 @@ object QueriesSimilarity {
     */
   private val GraphSampleSeed = 15
   private val GraphSampleMod = 13
-  private def graphSample(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
+  private def graphSample(df: DataFrame): DataFrame =
     df.filter(HashFns.md5Long(col("vec_id").cast("string"),
       GraphSampleSeed) % GraphSampleMod === 0)
   private val graphSamplePredSql: String =
@@ -389,19 +387,16 @@ object QueriesSimilarity {
       s" % $GraphSampleMod = 0"
 
   /** EXACT cosine kNN-3 edge list (src, dst, w=cos) — the brute-force
-    * all-pairs recall-BASELINE edge build shared by the five exact
-    * graph queries (q_graph_pagerank / _label_prop / _triangles /
-    * _clustering_coeff / _kcore); `sampled = true` restricts the node
-    * set to the deterministic [[graphSample]] 1/13 slice FIRST, so the
-    * `_sampled` decade faces compare the exact kNN graph OF THE SAMPLED
+    * all-pairs recall-BASELINE edge build of the exact graph face;
+    * `sampled = true` restricts the node set to the deterministic
+    * [[graphSample]] 1/13 slice FIRST, so the `_sampled` face compares the exact kNN graph OF THE SAMPLED
     * CORPUS (a self-consistent graph, not sampled edges of the full
     * graph). The crossJoin is intentional and labeled: this is the
-    * recall oracle, (n/13)² is still quadratic — the `_lsh` twins are
+    * recall oracle, (n/13)² is still quadratic — the `_lsh` face is
     * the 100 TB scale path. Mirrors [[exactKnnEdgeCtes]] CTE-for-stage.
     */
-  private def exactKnnEdges(s: org.apache.spark.sql.SparkSession,
-                            d: String, sampled: Boolean = false)
-      : org.apache.spark.sql.DataFrame = {
+  private def exactKnnEdges(s: SparkSession, d: String,
+                            sampled: Boolean = false): DataFrame = {
     // embeddingsSpread (full path only): the quadratic crossJoin
     // inherits the left side's partitioning, so an unspread
     // single-file scan ran the whole n² cosine pass in ONE task
@@ -427,30 +422,170 @@ object QueriesSimilarity {
       .select(col("src"), col("nid").as("dst"), col("cos").as("w"))
   }
 
-  /** Local clustering coefficient cc(v) = 2·tri(v)/(deg(v)·(deg(v)−1))
-    * over a directed edge list — the shared back half of
-    * q_graph_clustering_coeff and its `_lsh`/`_sampled` twins (one
-    * definition, three consumers, zero drift). The undirected
-    * projection is cached because the degree aggregate and the
-    * triangle count both consume it.
+  /** One edge face of the kNN-3 graph family: the Spark edge build
+    * (src, dst, w = cos), the DuckDB CTEs that mirror it stage for
+    * stage and end in `edges(src, dst, w)`, and the face's node
+    * restriction (a Spark filter and its SQL predicate). Only label
+    * propagation's seed universe reads the restriction; off the
+    * `_sampled` face it is the identity / "TRUE".
     */
-  private def clusteringCoeff(edges: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val und = edges
-      .select(least(col("src"), col("dst")).as("u"),
+  private final case class EdgeFace(
+      suffix: String,
+      edges: (SparkSession, String) => DataFrame,
+      edgeCtes: String,
+      nodes: DataFrame => DataFrame,
+      nodePredSql: String)
+
+  private def edgeFaces: Seq[EdgeFace] = Seq(
+    // Exact: brute-force all-pairs top-3 cosine, the labeled recall
+    // baseline the other two faces are judged against.
+    EdgeFace("", exactKnnEdges(_, _), exactKnnEdgeCtes("TRUE"),
+      identity, "TRUE"),
+    // _lsh: the SCALE PATH. Edges come from the certified multi-probe
+    // sign-bit LSH candidate index (the q_sim_embedding_neardup
+    // machinery: adaptive bucket width, bucket EQUI-join) instead of
+    // the all-pairs crossJoin, so candidate volume is
+    // O(n · probes · bucketSize), never n², and the executed plan has
+    // NO CartesianProduct / BroadcastNestedLoopJoin node
+    // (PlanSpec-pinned). Nodes no probe touches don't enter the graph;
+    // the oracle builds the identical banded edge set (weights
+    // included), so the compare is exact, not recall-fuzzy.
+    EdgeFace("_lsh", lshKnnEdges, lshKnnEdgeCtesSql, identity, "TRUE"),
+    // _sampled: the decade-evidence face of the exact baseline (the
+    // q_sim_containment_indexed_sampled convention). The full exact
+    // build is intrinsically quadratic (4e10 pairs at the 200k-vector
+    // decade, not replayable in any engine), but the exact kNN-3 graph
+    // of the deterministic 1/13 hash-sampled slice is ~2.4e8 pairs at
+    // sf10, so the exact family gets hash-tight oracle rows at sf1/sf10
+    // instead of resting on sf0.1 evidence alone. NOT a scale path
+    // (`_lsh` is). Populated at every scale (33 sampled nodes at
+    // sf0.01, 15.5k at sf10).
+    EdgeFace("_sampled", exactKnnEdges(_, _, sampled = true),
+      exactKnnEdgeCtes(graphSamplePredSql), graphSample,
+      graphSamplePredSql))
+
+  /** One kNN-3 graph algorithm, defined once: its Spark body over an
+    * edge face and its oracle tail over that face's `edges` CTE.
+    */
+  private final case class GraphAlgo(
+      name: String,
+      spark: (SparkSession, String, EdgeFace) => DataFrame,
+      oracleTail: EdgeFace => String)
+
+  /** Undirected simple projection (u < v, no self-loops, distinct) of a
+    * directed (src, dst) edge list; [[undCteSql]] is its oracle mirror,
+    * shared by the triangle and k-core chains.
+    */
+  private def undirected(edges: DataFrame): DataFrame =
+    edges.select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v")).distinct().cache()
-    val deg = und.select(col("u").as("id"))
-      .unionAll(und.select(col("v").as("id")))
-      .groupBy(col("id")).agg(count(lit(1)).as("deg"))
-    graft.operators.Triangles.perNode(und.select(
-        col("u").as("src"), col("v").as("dst")))
-      .join(deg, Seq("id"))
-      .select(col("id").as("vec_id"), col("n_tri"), col("deg"),
-        ((col("n_tri") * lit(2L))
-          / (col("deg") * (col("deg") - lit(1L)))).as("clustering"))
-      .orderBy(col("vec_id"))
-  }
+      .filter(col("u") =!= col("v")).distinct()
+  private val undCteSql: String =
+    """und AS (
+      |  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
+      |  FROM edges WHERE src <> dst)""".stripMargin
+
+  private def graphAlgos: Seq[GraphAlgo] = Seq(
+    // PageRank (operators/PageRank): graph centrality; nodes that many
+    // neighborhoods point at are the corpus's "hub" content, the
+    // weighting curation pipelines put behind importance sampling.
+    // 5 damped iterations, every iteration stabilized to the 1e-12
+    // grid with source-ordered contribution folds — the oracle unrolls
+    // and replays all 5 bit-exactly.
+    GraphAlgo("pagerank",
+      (s, d, f) =>
+        graft.operators.PageRank.run(
+            f.edges(s, d).select(col("src"), col("dst")),
+            damping = 0.85, iters = 5)
+          .select(col("id").as("vec_id"), col("r").as("pagerank"))
+          .orderBy(col("vec_id")),
+      _ => pagerankChainSql),
+    // Label propagation (operators/LabelProp): semi-supervised corpus
+    // labeling. A 20% seed slice (vec_id % 5 == 0 keeps its label, the
+    // "human-labeled" subset) propagates over the weighted kNN-3 graph
+    // by 2 rounds of clamped weighted-majority vote. The vote is a
+    // skew-safe max_by aggregate and every weight sum folds in neighbor
+    // order, so the oracle replays the rounds bit-for-bit. The seed
+    // universe takes the face's node restriction, so every propagated
+    // row ranges over exactly the nodes the edges were built on.
+    GraphAlgo("label_prop",
+      (s, d, f) => {
+        val seeds = f.nodes(Tables.embeddings(s, d))
+          .select(col("vec_id").as("id"),
+            when(col("vec_id") % 5 === 0, col("label")).as("lab"))
+        graft.operators.LabelProp.run(f.edges(s, d), seeds, iters = 2)
+          .select(col("id").as("vec_id"), col("lab").as("label_prop"))
+          .orderBy(col("vec_id"))
+      },
+      f => labelPropChain(f.nodePredSql)),
+    // Degree-ordered triangle counting (operators/Triangles): per-node
+    // triangle participation, the densification signal under
+    // clustering coefficients and near-dup community checks.
+    // Degree-ordering bounds wedge work at O(m^1.5) and spreads the hot
+    // vertex's wedges to its low-degree neighbors (Suri &
+    // Vassilvitskii 2011); counts are exact integers.
+    GraphAlgo("triangles",
+      (s, d, f) =>
+        graft.operators.Triangles.perNode(
+            f.edges(s, d).select(col("src"), col("dst")))
+          .select(col("id").as("vec_id"), col("n_tri"))
+          .orderBy(col("vec_id")),
+      _ => s"""$triangleChainSql
+              |SELECT id AS vec_id, CAST(count(*) AS BIGINT) AS n_tri
+              |FROM nodes GROUP BY 1 ORDER BY vec_id""".stripMargin),
+    // Local clustering coefficient cc(v) = 2·tri(v)/(deg(v)·(deg(v)−1)):
+    // the density signal community detection thresholds on (a near-dup
+    // cluster's members have cc -> 1, bridge nodes -> 0). One extra
+    // broadcast-sized degree join over the triangle machinery; cc is an
+    // exact integer ratio. The undirected projection is cached because
+    // the degree aggregate and the triangle count both consume it.
+    GraphAlgo("clustering_coeff",
+      (s, d, f) => {
+        val und = undirected(
+          f.edges(s, d).select(col("src"), col("dst"))).cache()
+        val deg = und.select(col("u").as("id"))
+          .unionAll(und.select(col("v").as("id")))
+          .groupBy(col("id")).agg(count(lit(1)).as("deg"))
+        graft.operators.Triangles.perNode(und.select(
+            col("u").as("src"), col("v").as("dst")))
+          .join(deg, Seq("id"))
+          .select(col("id").as("vec_id"), col("n_tri"), col("deg"),
+            ((col("n_tri") * lit(2L))
+              / (col("deg") * (col("deg") - lit(1L)))).as("clustering"))
+          .orderBy(col("vec_id"))
+      },
+      _ => s"""$triangleChainSql,
+              |tc AS (SELECT id, CAST(count(*) AS BIGINT) AS n_tri
+              |       FROM nodes GROUP BY 1)
+              |SELECT tc.id AS vec_id, tc.n_tri,
+              |  CAST(deg.deg AS BIGINT) AS deg,
+              |  (tc.n_tri * 2) / (deg.deg * (deg.deg - 1)) AS clustering
+              |FROM tc JOIN deg ON deg.id = tc.id
+              |ORDER BY vec_id""".stripMargin),
+    // Bounded k-core peeling (operators/KCore.boundedPeel): three rounds
+    // of "drop nodes with degree < 3 among survivors", then the
+    // survivors' final degrees — the dense-kernel extractor community
+    // detection and near-dup cluster triage start from. Fixed-round
+    // peeling keeps the cost deterministic and distributed (one degree
+    // aggregate + two restriction joins per round, cached so the
+    // lineage stays linear); the oracle unrolls the identical three
+    // rounds as chained CTEs. Pure integer outputs.
+    GraphAlgo("kcore",
+      (s, d, f) =>
+        graft.operators.KCore.boundedPeel(
+            undirected(f.edges(s, d).select(col("src"), col("dst"))),
+            k = 3, rounds = 3)
+          .select(col("id").as("vec_id"), col("deg"))
+          .orderBy(col("vec_id")),
+      _ => kcoreChainSql))
+
+  /** The kNN-3 graph family: every algorithm on every edge face, named
+    * `q_graph_<algorithm><face suffix>`.
+    */
+  private def graphQs: Seq[Q] =
+    for (a <- graphAlgos; f <- edgeFaces)
+      yield Q(s"q_graph_${a.name}${f.suffix}", (s, d) => a.spark(s, d, f),
+        Some(s"WITH ${f.edgeCtes},\n${a.oracleTail(f)}"))
 
   /** Shared CTE chain of the near-dup CLUSTER oracles (dedup -> shingle
     * -> sign -> band -> capped candidates -> exact Jaccard >= 0.8 ->
@@ -1376,75 +1511,6 @@ object QueriesSimilarity {
                   "CAST(group_key AS VARCHAR)", 7)} % 100 < 90
            |    THEN 'train' ELSE 'eval' END AS split
            |FROM g ORDER BY doc_id""".stripMargin)),
-
-    // ----------------------------------------------- k-NN graph PageRank
-    // Graph centrality over the embedding 3-NN graph
-    // (operators/PageRank): nodes that many neighborhoods point at are
-    // the corpus's "hub" content — the weighting curation pipelines put
-    // behind importance sampling. Edges here are brute-force exact
-    // top-3 cosine (the recall-oracle convention; the ANN family
-    // provides the bucketed edge builder at scale), then 5 damped
-    // iterations, every iteration stabilized to the 1e-12 grid with
-    // source-ordered contribution folds — the oracle unrolls and
-    // replays all 5 bit-exactly.
-    Q("q_graph_pagerank",
-      (s, d) => {
-        import graft.operators.PageRank
-        PageRank.run(exactKnnEdges(s, d).select(col("src"), col("dst")),
-            damping = 0.85, iters = 5)
-          .select(col("id").as("vec_id"), col("r").as("pagerank"))
-          .orderBy(col("vec_id"))
-      },
-      Some(s"""WITH $exactKnnEdgeCtesSql,
-           |$pagerankChainSql""".stripMargin)),
-
-    // ----------------------------- k-NN graph PageRank, BANDED edges
-    // The SCALE-PATH composition the exact query is the recall baseline
-    // for: the SAME 5-iteration damped PageRank, but the kNN-3 edges
-    // come from the certified multi-probe sign-bit LSH candidate index
-    // (the q_sim_embedding_neardup machinery — adaptive bucket width,
-    // bucket EQUI-join) instead of the all-pairs crossJoin. Candidate
-    // volume is O(n · probes · bucketSize), never n²; PlanSpec pins
-    // that the executed plan contains NO CartesianProduct /
-    // BroadcastNestedLoopJoin node. Nodes untouched by any probe
-    // simply don't enter the graph — the oracle builds the identical
-    // banded edge set, so the comparison is exact, not recall-fuzzy.
-    Q("q_graph_pagerank_lsh",
-      (s, d) => {
-        import graft.operators.PageRank
-        PageRank.run(lshKnnEdges(s, d).select(col("src"), col("dst")),
-            damping = 0.85, iters = 5)
-          .select(col("id").as("vec_id"), col("r").as("pagerank"))
-          .orderBy(col("vec_id"))
-      },
-      Some(s"""WITH $lshKnnEdgeCtesSql,
-           |$pagerankChainSql""".stripMargin)),
-
-    // --------------------- k-NN graph PageRank, SAMPLED exact edges
-    // The decade-evidence face of the exact recall baseline (the
-    // q_sim_containment_indexed_sampled convention): the SAME 5-round
-    // damped chain over the exact kNN-3 graph of the deterministic
-    // 1/13 hash-sampled corpus slice. The full exact build is
-    // intrinsically quadratic (4e10 pairs at the 200k-vector decade —
-    // not replayable in any engine), but the sampled slice's (n/13)²
-    // pair join IS: ~2.4e8 pairs at sf10, so the exact graph family
-    // gets hash-tight oracle rows at sf1/sf10 instead of resting on
-    // sf0.1 evidence alone. NOT a scale path (the _lsh twin is); this
-    // face certifies the baseline the twin is judged against, at
-    // decade scale. Populated at every scale (33 sampled nodes at
-    // sf0.01 → 15.5k at sf10).
-    Q("q_graph_pagerank_sampled",
-      (s, d) => {
-        import graft.operators.PageRank
-        PageRank.run(
-            exactKnnEdges(s, d, sampled = true)
-              .select(col("src"), col("dst")),
-            damping = 0.85, iters = 5)
-          .select(col("id").as("vec_id"), col("r").as("pagerank"))
-          .orderBy(col("vec_id"))
-      },
-      Some(s"""WITH ${exactKnnEdgeCtes(graphSamplePredSql)},
-           |$pagerankChainSql""".stripMargin)),
 
     // ------------------------------------------------ LSH hot-bucket report
     // The observability half of candidatePairs' maxBucket cap: every
@@ -2583,67 +2649,6 @@ object QueriesSimilarity {
               |FROM assign a LEFT JOIN dropped d USING (vec_id)
               |ORDER BY a.vec_id""".stripMargin)),
 
-    // --------------------------------- kNN label propagation (2 rounds)
-    // Semi-supervised corpus labeling: a 20% seed slice (vec_id % 5 ==
-    // 0 keeps its label — the "human-labeled" subset) propagates to
-    // the rest over the cosine kNN-3 graph via clamped weighted
-    // majority vote (operators/LabelProp). The brute-force kNN edge
-    // build is the same LABELED-baseline path as q_graph_pagerank
-    // (q_graph_label_prop_lsh is the banded scale-path twin); the vote
-    // is a skew-safe max_by aggregate and every
-    // weight sum folds in neighbor order, so the oracle replays the
-    // rounds bit-for-bit.
-    Q("q_graph_label_prop",
-      (s, d) => {
-        val seeds = Tables.embeddings(s, d).select(col("vec_id").as("id"),
-          when(col("vec_id") % 5 === 0, col("label")).as("lab"))
-        graft.operators.LabelProp.run(exactKnnEdges(s, d), seeds,
-            iters = 2)
-          .select(col("id").as("vec_id"), col("lab").as("label_prop"))
-          .orderBy(col("vec_id"))
-      },
-      Some(s"""WITH $exactKnnEdgeCtesSql,
-           |$labelPropChainSql""".stripMargin)),
-
-    // --------------------- kNN label propagation, BANDED edges
-    // q_graph_label_prop's scale-path twin (the q_graph_pagerank_lsh
-    // convention): the SAME 2-round clamped weighted-majority vote, but
-    // the weighted kNN-3 edges come from the certified multi-probe
-    // sign-bit LSH candidate index — bucket equi-joins end to end, no
-    // cartesian node in the executed plan (PlanSpec-pinned). The oracle
-    // replays the identical banded edge build (weights included), so
-    // every propagated label is compared exactly, not recall-fuzzy.
-    Q("q_graph_label_prop_lsh",
-      (s, d) => {
-        val seeds = Tables.embeddings(s, d).select(col("vec_id").as("id"),
-          when(col("vec_id") % 5 === 0, col("label")).as("lab"))
-        graft.operators.LabelProp.run(lshKnnEdges(s, d), seeds, iters = 2)
-          .select(col("id").as("vec_id"), col("lab").as("label_prop"))
-          .orderBy(col("vec_id"))
-      },
-      Some(s"""WITH $lshKnnEdgeCtesSql,
-           |$labelPropChainSql""".stripMargin)),
-
-    // ------------------ kNN label propagation, SAMPLED exact edges
-    // The q_graph_pagerank_sampled convention: the SAME 2-round
-    // clamped weighted-majority vote over the exact weighted kNN-3
-    // graph of the 1/13 hash-sampled slice, with the seed universe
-    // (lab0) restricted to the same slice so every propagated row
-    // ranges over exactly the nodes the edges were built on — the
-    // exact label-prop baseline gets hash-tight sf1/sf10 oracle rows.
-    Q("q_graph_label_prop_sampled",
-      (s, d) => {
-        val seeds = graphSample(Tables.embeddings(s, d))
-          .select(col("vec_id").as("id"),
-            when(col("vec_id") % 5 === 0, col("label")).as("lab"))
-        graft.operators.LabelProp.run(
-            exactKnnEdges(s, d, sampled = true), seeds, iters = 2)
-          .select(col("id").as("vec_id"), col("lab").as("label_prop"))
-          .orderBy(col("vec_id"))
-      },
-      Some(s"""WITH ${exactKnnEdgeCtes(graphSamplePredSql)},
-           |${labelPropChain(graphSamplePredSql)}""".stripMargin)),
-
     // ------------------------- dominant principal direction (power iter)
     // Two matrix-free power iterations over the embedding matrix: the
     // top singular direction used for all-but-the-top de-biasing and
@@ -2994,124 +2999,6 @@ object QueriesSimilarity {
              |FROM pref GROUP BY h, df HAVING count(*) > 2
              |ORDER BY prefix_df DESC, h""".stripMargin)),
 
-    // ------------------------- degree-ordered triangle counting (kNN graph)
-    // operators/Triangles over the same cosine kNN-3 edge build as
-    // q_graph_pagerank (labeled baseline; q_graph_triangles_lsh is the
-    // banded scale-path twin). Per-node triangle
-    // participation — the densification signal under clustering
-    // coefficients and near-dup community checks. Degree-ordering
-    // bounds wedge work at O(m^1.5) and spreads the hot vertex's
-    // wedges to its low-degree neighbors (Suri & Vassilvitskii 2011);
-    // counts are exact integers.
-    Q("q_graph_triangles",
-      (s, d) => {
-        graft.operators.Triangles.perNode(
-            exactKnnEdges(s, d).select(col("src"), col("dst")))
-          .select(col("id").as("vec_id"), col("n_tri"))
-          .orderBy(col("vec_id"))
-      },
-      Some(s"""WITH $exactKnnEdgeCtesSql,
-             |$triangleChainSql
-             |SELECT id AS vec_id, CAST(count(*) AS BIGINT) AS n_tri
-             |FROM nodes GROUP BY 1 ORDER BY vec_id""".stripMargin)),
-
-    // ---------------- degree-ordered triangle counting, BANDED edges
-    // q_graph_triangles' scale-path twin (the q_graph_pagerank_lsh
-    // convention): the SAME degree-ordered O(m^1.5) wedge count, but
-    // the kNN-3 edges come from the multi-probe sign-bit LSH candidate
-    // index — bucket equi-joins end to end, no cartesian node in the
-    // executed plan (PlanSpec-pinned). The oracle replays the identical
-    // banded edge build, so every per-node count is exact.
-    Q("q_graph_triangles_lsh",
-      (s, d) => {
-        graft.operators.Triangles.perNode(
-            lshKnnEdges(s, d).select(col("src"), col("dst")))
-          .select(col("id").as("vec_id"), col("n_tri"))
-          .orderBy(col("vec_id"))
-      },
-      Some(s"""WITH $lshKnnEdgeCtesSql,
-             |$triangleChainSql
-             |SELECT id AS vec_id, CAST(count(*) AS BIGINT) AS n_tri
-             |FROM nodes GROUP BY 1 ORDER BY vec_id""".stripMargin)),
-
-    // ------- degree-ordered triangle counting, SAMPLED exact edges
-    // The q_graph_pagerank_sampled convention: the SAME degree-ordered
-    // O(m^1.5) wedge count over the exact kNN-3 graph of the 1/13
-    // hash-sampled slice — exact integer counts, hash-tight at
-    // sf1/sf10 (13 triangle-participating nodes at sf0.01, 217 at
-    // sf1: populated at every scale, empirically checked).
-    Q("q_graph_triangles_sampled",
-      (s, d) => {
-        graft.operators.Triangles.perNode(
-            exactKnnEdges(s, d, sampled = true)
-              .select(col("src"), col("dst")))
-          .select(col("id").as("vec_id"), col("n_tri"))
-          .orderBy(col("vec_id"))
-      },
-      Some(s"""WITH ${exactKnnEdgeCtes(graphSamplePredSql)},
-             |$triangleChainSql
-             |SELECT id AS vec_id, CAST(count(*) AS BIGINT) AS n_tri
-             |FROM nodes GROUP BY 1 ORDER BY vec_id""".stripMargin)),
-
-    // ------------------------- local clustering coefficient (kNN graph)
-    // cc(v) = triangles(v) / C(deg(v), 2) over the same kNN-3 graph —
-    // the density signal community detection thresholds on (a near-dup
-    // cluster's members have cc -> 1, bridge nodes -> 0;
-    // q_graph_clustering_coeff_lsh is the banded scale-path twin). One
-    // extra broadcast-sized degree join over q_graph_triangles' machinery;
-    // cc is an exact integer ratio. Oracle shares the triangle CTE
-    // chain via one definition.
-    Q("q_graph_clustering_coeff",
-      (s, d) => clusteringCoeff(
-        exactKnnEdges(s, d).select(col("src"), col("dst"))),
-      Some(s"""WITH $exactKnnEdgeCtesSql,
-             |$triangleChainSql,
-             |tc AS (SELECT id, CAST(count(*) AS BIGINT) AS n_tri
-             |       FROM nodes GROUP BY 1)
-             |SELECT tc.id AS vec_id, tc.n_tri,
-             |  CAST(deg.deg AS BIGINT) AS deg,
-             |  (tc.n_tri * 2) / (deg.deg * (deg.deg - 1)) AS clustering
-             |FROM tc JOIN deg ON deg.id = tc.id
-             |ORDER BY vec_id""".stripMargin)),
-
-    // ------------- local clustering coefficient, BANDED edges
-    // q_graph_clustering_coeff's scale-path twin (the
-    // q_graph_pagerank_lsh convention): identical cc(v) =
-    // 2·tri(v) / (deg(v)·(deg(v)−1)) over the multi-probe sign-bit LSH
-    // edge index — bucket equi-joins end to end, no cartesian node in
-    // the executed plan (PlanSpec-pinned). Exact integer ratio; the
-    // oracle replays the same banded edges.
-    Q("q_graph_clustering_coeff_lsh",
-      (s, d) => clusteringCoeff(
-        lshKnnEdges(s, d).select(col("src"), col("dst"))),
-      Some(s"""WITH $lshKnnEdgeCtesSql,
-             |$triangleChainSql,
-             |tc AS (SELECT id, CAST(count(*) AS BIGINT) AS n_tri
-             |       FROM nodes GROUP BY 1)
-             |SELECT tc.id AS vec_id, tc.n_tri,
-             |  CAST(deg.deg AS BIGINT) AS deg,
-             |  (tc.n_tri * 2) / (deg.deg * (deg.deg - 1)) AS clustering
-             |FROM tc JOIN deg ON deg.id = tc.id
-             |ORDER BY vec_id""".stripMargin)),
-
-    // ------- local clustering coefficient, SAMPLED exact edges
-    // The q_graph_pagerank_sampled convention: identical exact integer
-    // ratio over the exact kNN-3 graph of the 1/13 hash-sampled slice
-    // — the cc baseline gets hash-tight sf1/sf10 oracle rows.
-    Q("q_graph_clustering_coeff_sampled",
-      (s, d) => clusteringCoeff(
-        exactKnnEdges(s, d, sampled = true)
-          .select(col("src"), col("dst"))),
-      Some(s"""WITH ${exactKnnEdgeCtes(graphSamplePredSql)},
-             |$triangleChainSql,
-             |tc AS (SELECT id, CAST(count(*) AS BIGINT) AS n_tri
-             |       FROM nodes GROUP BY 1)
-             |SELECT tc.id AS vec_id, tc.n_tri,
-             |  CAST(deg.deg AS BIGINT) AS deg,
-             |  (tc.n_tri * 2) / (deg.deg * (deg.deg - 1)) AS clustering
-             |FROM tc JOIN deg ON deg.id = tc.id
-             |ORDER BY vec_id""".stripMargin)),
-
     // ------------------------- simplified silhouette (cluster quality)
     // Cluster-validation score for the label partition of the
     // embedding space: per vector, a = distance to the OWN label's
@@ -3203,72 +3090,6 @@ object QueriesSimilarity {
            |    ELSE 0.0 END AS silhouette
            |FROM a JOIN b USING (vec_id) ORDER BY vec_id""".stripMargin
       }),
-
-    // ------------------------------ bounded k-core peeling (kNN graph)
-    // operators/KCore.boundedPeel over the same kNN-3 graph: three
-    // rounds of "drop nodes with degree < 3 among survivors", then the
-    // survivors' final degrees — the dense-kernel extractor community
-    // detection and near-dup cluster triage start from. Fixed-round
-    // peeling keeps the cost deterministic and distributed (one degree
-    // aggregate + two restriction joins per round, cached so the
-    // lineage stays linear); the oracle unrolls the identical three
-    // rounds as chained CTEs. Pure integer outputs.
-    Q("q_graph_kcore",
-      (s, d) => {
-        val edges = exactKnnEdges(s, d).select(col("src"), col("dst"))
-        val und = edges
-          .select(least(col("src"), col("dst")).as("u"),
-            greatest(col("src"), col("dst")).as("v"))
-          .filter(col("u") =!= col("v")).distinct()
-        graft.operators.KCore.boundedPeel(und, k = 3, rounds = 3)
-          .select(col("id").as("vec_id"), col("deg"))
-          .orderBy(col("vec_id"))
-      },
-      Some(s"""WITH $exactKnnEdgeCtesSql,
-           |$kcoreChainSql""".stripMargin)),
-
-    // ------------------------------- bounded k-core peel, BANDED edges
-    // q_graph_kcore's scale-path twin (the q_graph_pagerank_lsh
-    // convention): identical 3-round k=3 peeling, but the undirected
-    // edge set derives from the multi-probe sign-bit LSH candidate
-    // index — bucket equi-joins end to end, no cartesian node in the
-    // executed plan (PlanSpec-pinned). The oracle replays the same
-    // banded edge build, so every surviving (vec_id, deg) row is
-    // compared exactly.
-    Q("q_graph_kcore_lsh",
-      (s, d) => {
-        val edges = lshKnnEdges(s, d).select(col("src"), col("dst"))
-        val und = edges
-          .select(least(col("src"), col("dst")).as("u"),
-            greatest(col("src"), col("dst")).as("v"))
-          .filter(col("u") =!= col("v")).distinct()
-        graft.operators.KCore.boundedPeel(und, k = 3, rounds = 3)
-          .select(col("id").as("vec_id"), col("deg"))
-          .orderBy(col("vec_id"))
-      },
-      Some(s"""WITH $lshKnnEdgeCtesSql,
-           |$kcoreChainSql""".stripMargin)),
-
-    // --------------------- bounded k-core peel, SAMPLED exact edges
-    // The q_graph_pagerank_sampled convention: identical 3-round k=3
-    // peeling over the exact kNN-3 graph of the 1/13 hash-sampled
-    // slice — the exact k-core baseline gets hash-tight sf1/sf10
-    // oracle rows (survivors populated at every scale: 33 at sf0.01,
-    // 1551 at sf1, empirically checked).
-    Q("q_graph_kcore_sampled",
-      (s, d) => {
-        val edges = exactKnnEdges(s, d, sampled = true)
-          .select(col("src"), col("dst"))
-        val und = edges
-          .select(least(col("src"), col("dst")).as("u"),
-            greatest(col("src"), col("dst")).as("v"))
-          .filter(col("u") =!= col("v")).distinct()
-        graft.operators.KCore.boundedPeel(und, k = 3, rounds = 3)
-          .select(col("id").as("vec_id"), col("deg"))
-          .orderBy(col("vec_id"))
-      },
-      Some(s"""WITH ${exactKnnEdgeCtes(graphSamplePredSql)},
-           |$kcoreChainSql""".stripMargin)),
 
     // -------------------------------- sorted-neighborhood near-dup scan
     // The record-linkage classic (Hernández & Stolfo merge/purge)
@@ -3671,14 +3492,18 @@ object QueriesSimilarity {
            |UNION ALL SELECT 5, vec_id, dmin FROM c5
            |ORDER BY round""".stripMargin
       })
-  )
+  ) ++ graphQs
 
-  /** EXACT kNN-3 edge CTEs (ends with `edges(src, dst, w)` — w is the
-    * cosine, unused by the unweighted chains): all-pairs cosine + top-3
-    * per source — the labeled recall-BASELINE edge build shared by the
-    * exact graph-family oracles. The `_lsh` twins swap in
-    * [[lshKnnEdgeCtesSql]] and keep every downstream CTE — one
-    * definition per chain, many consumers, zero drift.
+  /** EXACT kNN-3 edge CTEs over `embeddings WHERE pred` (ends with
+    * `edges(src, dst, w)` — w is the cosine, unused by the unweighted
+    * chains): all-pairs cosine + top-3 per source — the labeled
+    * recall-BASELINE edge build of the exact graph face ("TRUE").
+    * The `_sampled` face passes [[graphSamplePredSql]] so the oracle
+    * replays the identical 1/13-node exact kNN graph (the
+    * q_sim_containment_indexed_sampled convention: the predicate bounds
+    * the quadratic pair join to ~1/169, which is what makes this
+    * brute-force oracle REPLAYABLE at sf10 where the full 4·10¹⁰-pair
+    * join is infeasible in DuckDB).
     *
     * `edges` carries AS MATERIALIZED (result-identical, the
     * q_text_bm25_lake precedent): every graph chain references its
@@ -3687,16 +3512,6 @@ object QueriesSimilarity {
     * decade the overlapping copies spilled 68 GB of temp before dying
     * on ENOSPC; the one hint pins the narrow edge list (n·3 rows)
     * instead and the sf10 replay completes in ~98 s.
-    */
-  private lazy val exactKnnEdgeCtesSql: String = exactKnnEdgeCtes("TRUE")
-
-  /** The same exact edge build over `embeddings WHERE pred` — the
-    * `_sampled` decade faces pass [[graphSamplePredSql]] so the oracle
-    * replays the identical 1/13-node exact kNN graph (the
-    * q_sim_containment_indexed_sampled convention: the predicate bounds
-    * the quadratic pair join to ~1/169, which is what makes this
-    * brute-force oracle REPLAYABLE at sf10 where the full 4·10¹⁰-pair
-    * join is infeasible in DuckDB).
     */
   private def exactKnnEdgeCtes(pred: String): String =
     s"""e AS (
@@ -3751,9 +3566,7 @@ object QueriesSimilarity {
 
   /** PageRank chain over a prior `edges(src, dst)` CTE: nodes/outdeg/
     * uniform start, 5 damped iterations (source-ordered contribution
-    * folds, 1e-12 stabilized), final (vec_id, pagerank) select. Shared
-    * by q_graph_pagerank (exact edges) and q_graph_pagerank_lsh
-    * (banded edges).
+    * folds, 1e-12 stabilized), final (vec_id, pagerank) select.
     */
   private lazy val pagerankChainSql: String = {
     import graft.functions.Stabilize.stabSql
@@ -3786,8 +3599,6 @@ object QueriesSimilarity {
 
   /** Bounded k-core chain (k=3, 3 peel rounds) over a prior
     * `edges(src, dst)` CTE, ending in the final (vec_id, deg) select.
-    * Shared by q_graph_kcore (exact edges) and q_graph_kcore_lsh
-    * (banded edges).
     */
   private lazy val kcoreChainSql: String = {
     def degCte(src: String, nm: String): String =
@@ -3802,9 +3613,7 @@ object QueriesSimilarity {
          |  SELECT u, v FROM $src
          |  JOIN kk$r a ON a.id = u JOIN kk$r b ON b.id = v)"""
         .stripMargin
-    s"""und AS (
-       |  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-       |  FROM edges WHERE src <> dst),
+    s"""$undCteSql,
        |${round("und", 1)},
        |${round("ke1", 2)},
        |${round("ke2", 3)},
@@ -3814,18 +3623,10 @@ object QueriesSimilarity {
   }
 
   /** Weighted-majority label-propagation chain (2 clamped rounds) over
-    * a prior `edges(src, dst, w)` CTE: 20% seed slice (vec_id % 5 == 0),
-    * per-round dst-ordered weight folds + lowest-label argmax vote +
-    * seed clamp, final (vec_id, label_prop) select. Shared by
-    * q_graph_label_prop (exact edges) and q_graph_label_prop_lsh
-    * (banded edges).
-    */
-  private lazy val labelPropChainSql: String = labelPropChain("TRUE")
-
-  /** The same 2-round chain with the seed universe restricted to
-    * `embeddings WHERE pred` — q_graph_label_prop_sampled passes
-    * [[graphSamplePredSql]] so lab0 (and thus every propagated row)
-    * ranges over exactly the sampled node set the edges were built on.
+    * a prior `edges(src, dst, w)` CTE: 20% seed slice (vec_id % 5 == 0)
+    * of `embeddings WHERE pred` (the face's node restriction), per-round
+    * dst-ordered weight folds + lowest-label argmax vote + seed clamp,
+    * final (vec_id, label_prop) select.
     */
   private def labelPropChain(pred: String): String = {
     val round = (t: Int) =>
@@ -3854,17 +3655,13 @@ object QueriesSimilarity {
        |ORDER BY vec_id""".stripMargin
   }
 
-  /** Shared CTE chain of the kNN-3 triangle oracles (q_graph_triangles /
-    * q_graph_clustering_coeff and their `_lsh` twins), over a prior
-    * `edges(src, dst, …)` CTE: undirected → degrees →
-    * degree-ordered orientation → wedges → triangles → `nodes` (one id
-    * row per triangle corner). One definition, four consumers, zero
-    * drift.
+  /** Shared CTE chain of the kNN-3 triangle and clustering-coefficient
+    * oracles, over a prior `edges(src, dst, …)` CTE: undirected →
+    * degrees → degree-ordered orientation → wedges → triangles →
+    * `nodes` (one id row per triangle corner).
     */
   private lazy val triangleChainSql: String =
-    s"""und AS (
-       |  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-       |  FROM edges WHERE src <> dst),
+    s"""$undCteSql,
        |deg AS (
        |  SELECT id, count(*) AS deg FROM (
        |    SELECT u AS id FROM und UNION ALL SELECT v FROM und)

@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Path, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -15,18 +15,10 @@ object Verify {
     // Optional local-iteration filters (SPARK_GRAFT_ONLY prefix list,
     // SPARK_GRAFT_ONLY_EXACT, SPARK_GRAFT_FAMILY) — shared contract in
     // Queries.selected; the driver never sets any of them.
+    // oracle_sql.json lists the selected queries only, so a filtered run
+    // never pairs an oracle with an output left over from an earlier run.
     SparkEntry.queries.filter(kv => Queries.selected(kv._1))
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // Queries cache() intermediates and never unpersist; across ~100
-      // queries the accumulated storage becomes GC pressure (see
-      // Bench). Each query's dump is self-contained, so clear between.
-      spark.sharedState.cacheManager.clearCache()
-    }
+      .foreach { case (name, fn) => dump(spark, sfDir, outDir, name, fn) }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -39,9 +31,43 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter(kv => Queries.selected(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
+
+  /** Writes one query's result to `$outDir/$name` as a single parquet
+    * file. Any earlier output there is deleted first, and a failed
+    * write's leftovers after, so a query that fails leaves no directory
+    * for the compare to mistake for its result. Returns false (and logs
+    * the error) when the query failed.
+    */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+           name: String, fn: (SparkSession, String) => DataFrame): Boolean = {
+    val out = Paths.get(outDir, name)
+    deleteTree(out)
+    val ok =
+      try {
+        fn(spark, sfDir).coalesce(1).write.parquet(out.toString)
+        true
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        deleteTree(out)
+        false
+      }
+    // Queries cache() intermediates and never unpersist; across ~100
+    // queries the accumulated storage becomes GC pressure (see
+    // Bench). Each query's dump is self-contained, so clear between.
+    spark.sharedState.cacheManager.clearCache()
+    ok
+  }
+
+  private def deleteTree(p: Path): Unit =
+    if (Files.exists(p)) {
+      val paths = Files.walk(p)
+      try paths.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(f => Files.delete(f))
+      finally paths.close()
+    }
 }

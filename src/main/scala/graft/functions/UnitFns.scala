@@ -10,12 +10,8 @@ import org.apache.spark.sql.functions._
 object UnitFns {
   // F15 family — plain arithmetic, codegen-friendly.
   def cmToKm(c: Column): Column       = c / 100000.0
-  def cmToM(c: Column): Column        = c / 100.0
-  def mToKm(c: Column): Column        = c / 1000.0
   def msToSeconds(c: Column): Column  = c / 1000.0
-  def cmPerMsToMPerS(c: Column): Column = c * 10.0
   def secondsToHours(c: Column, scale: Int = 1): Column = round(c / 3600.0, scale)
-  def secondsToMinutes(c: Column, scale: Int = 2): Column = round(c / 60.0, scale)
 
   /** F16 — strip thousands commas then cast: "3,000" -> 3000.0. */
   def stripThousands(c: Column): Column =

@@ -93,36 +93,20 @@ object Similarity {
     * band bucket, deduplicated, a < b. The join key is (band, value) —
     * this is the only shuffle and it never compares cross-bucket pairs.
     *
-    * `maxBucket` caps bucket size: a bucket of m ids emits m(m-1)/2
-    * pairs, so one hot bucket (template spam, boilerplate) turns the
-    * candidate stage quadratic. Oversized buckets are DROPPED from
-    * near-dup candidacy — run exact dedup first so they can only arise
-    * from genuinely-distinct-but-templated content, and handle those via
-    * the bucket report, not the pair join.
+    * `maxBucket` caps bucket size and is required: a bucket of m ids
+    * emits m(m-1)/2 pairs, so one hot bucket (template spam,
+    * boilerplate) turns the candidate stage quadratic. Oversized
+    * buckets are DROPPED from near-dup candidacy — run exact dedup
+    * first so they can only arise from genuinely-distinct-but-templated
+    * content, and handle those via the bucket report, not the pair
+    * join. ONE groupBy generates the per-bucket pairs directly (see
+    * [[pairsWithinGroups]]); a caller that wants every bucket passes a
+    * cap no smaller than its id count.
     */
   def candidatePairs(bands: DataFrame, idCol: String,
-                     maxBucket: Int = Int.MaxValue): DataFrame = {
-    if (maxBucket == Int.MaxValue) {
-      // Uncapped path (no registered query uses it): collect_list of
-      // an unbounded hot bucket could OOM a task, so the self-join
-      // form stays for this case.
-      val a = bands.select(col("band"), col("band_value"),
-        col(idCol).as("id_a"))
-      val b = bands.select(col("band"), col("band_value"),
-        col(idCol).as("id_b"))
-      return a.join(b, Seq("band", "band_value"))
-        .filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b")).distinct()
-    }
-    // Capped path (every registered query): ONE groupBy generates the
-    // per-bucket pairs directly — the old sizes-groupBy + join +
-    // self-join planned THREE shuffles of the band frame and
-    // re-evaluated the upstream minhash aggregate once per read
-    // (r16 optimization round: the near-dup family's dominant repeated
-    // cost; guide §2.4).
+                     maxBucket: Int): DataFrame =
     pairsWithinGroups(bands, Seq(col("band"), col("band_value")),
       idCol, maxBucket)
-  }
 
   /** All unordered id pairs (id_a < id_b, distinct) co-occurring in at
     * least one group of size ≤ `maxBucket` — the shared candidate

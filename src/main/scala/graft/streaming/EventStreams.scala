@@ -69,16 +69,6 @@ object EventStreams {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  /** File-arrival ingest: each new JSON file under `dir` becomes a
-    * micro-batch (the streaming replacement for the reference's re-glob +
-    * full reload, `ETL Scripts/aggregate_json_files.py:29-48`).
-    */
-  def readJsonStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .schema(eventSchema)
-      .option("maxFilesPerTrigger", "16")
-      .json(dir)
-
   /** Exactly-once-per-id ingest: watermarked streaming dedup on the
     * event id (SURVEY §2.10 phase-2: the streaming replacement for the
     * reference's re-glob-and-reload, which relied on truncate+reload to

@@ -156,6 +156,19 @@ class InfraSpec extends AnyFunSuite {
     assert(Queries.family("q_sim_lsh_incremental_lake_probe") == "extension")
   }
 
+  test("Verify.dump deletes a stale output, so a failing query leaves none") {
+    val out = Files.createTempDirectory("graft_verify").toString
+    val stale = java.nio.file.Paths.get(out, "q_stale")
+    Files.createDirectories(stale)
+    Files.writeString(stale.resolve("part-00000.parquet"), "stale")
+    val ok = Verify.dump(spark, sf, out, "q_stale",
+      (_, _) => throw new IllegalStateException("query failed"))
+    assert(!ok, "a throwing query must report a failure")
+    assert(!Files.exists(stale), "stale output survived a failed query")
+    assert(Verify.dump(spark, sf, out, "q_ok", (s, _) => s.range(3).toDF()))
+    assert(new java.io.File(out, "q_ok").list().exists(_.endsWith(".parquet")))
+  }
+
   test("autoWidthFactor sums bytes recursively and gates on 1 GB") {
     // r12 defect: a top-level-only listing returned 0 bytes for
     // partitioned lake dirs (data lives in day=.../part-*.parquet),

@@ -37,7 +37,7 @@ class SimilaritySpec extends AnyFunSuite {
     val sh    = Similarity.charShingles(docs, "id", "text", k = 5)
     val sig   = Similarity.minhashSignature(sh, "id", numHashes = 8)
     val bands = Similarity.lshBands(sig, "id", numHashes = 8, rowsPerBand = 2)
-    val pairs = Similarity.candidatePairs(bands, "id")
+    val pairs = Similarity.candidatePairs(bands, "id", maxBucket = 4)
       .orderBy("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(pairs.contains((1L, 2L)))          // exact dup always collides
@@ -98,7 +98,8 @@ class SimilaritySpec extends AnyFunSuite {
     val sh = Similarity.charShingles(df, "id", "text", k = 5)
     val sig = Similarity.minhashSignature(sh, "id", numHashes = 16)
     val bands = Similarity.lshBands(sig, "id", 16, rowsPerBand = 2)
-    val cand = Similarity.candidatePairs(bands, "id").collect()
+    val cand = Similarity.candidatePairs(bands, "id", maxBucket = 64)
+      .collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = truth.count(cand).toDouble / truth.size
     info(f"LSH recall over ${truth.size} truth pairs = $recall%.3f")

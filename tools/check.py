@@ -21,8 +21,10 @@ def main(sf_dir, out_dir):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     n_pass = n_fail = 0
-    results = sorted(d for d in os.listdir(out_dir)
-                     if os.path.isdir(os.path.join(out_dir, d)))
+    # Every oracle key must have an output: a query whose dump is missing
+    # fails here instead of silently dropping out of the count.
+    results = sorted(set(oracle) | {d for d in os.listdir(out_dir)
+                                    if os.path.isdir(os.path.join(out_dir, d))})
     for name in results:
         files = glob.glob(os.path.join(out_dir, name, "*.parquet"))
         if not files:
