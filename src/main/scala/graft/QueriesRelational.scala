@@ -432,11 +432,11 @@ object QueriesRelational {
     Q("q_agg_mad_outliers",
       (s, d) => {
         def stab6(c: Column) = graft.functions.Stabilize.stab(c, 6)
-        // eventsSpread (r16): ev's lineage executes three times (med
+        // Tables.spread (r16): ev's lineage executes three times (med
         // histogram, dev for mad, dev for the final filter), each from
         // a single-task scan; the spread parallelizes all three passes
         // and its exchange is shared by subtree reuse
-        val ev = Tables.eventsSpread(s, d)
+        val ev = Tables.spread(s, d, "events")
           .select(col("event_id"), col("value").as("v"))
         val med = graft.operators.Percentiles
           .exactByHistogram(ev, "v", 0.5, "med_raw")
@@ -475,7 +475,7 @@ object QueriesRelational {
     Q("q_agg_equidepth_bins",
       (s, d) => {
         def stab6(c: Column) = graft.functions.Stabilize.stab(c, 6)
-        // lineitemSpread was MEASURED here in r16 and reverted (1.85 ->
+        // Tables.spread was MEASURED here in r16 and reverted (1.85 ->
         // 2.08 s): both consumers are histogram partial-aggs that
         // reduce well map-side, so the spread's exchange outweighs the
         // parallelism it buys
@@ -526,7 +526,7 @@ object QueriesRelational {
     // column count is plan width, not extra certification value.
     Q("q_profile_approx_distinct", {
         val cols = Seq("l_partkey", "l_quantity", "l_returnflag", "l_shipdate")
-        // lineitemSpread was MEASURED here in r16 and reverted (5.58 ->
+        // Tables.spread was MEASURED here in r16 and reverted (5.58 ->
         // 5.75 s): the Expand ×4 multiplies the spread's shuffle rows,
         // and the exact-distinct partial aggregation already reduces
         // poorly (high-cardinality keys), so the exchange buys nothing
@@ -1001,10 +1001,10 @@ object QueriesRelational {
         val li = Tables.lineitem(s, d).select(col("l_orderkey"),
           col("l_linenumber"), col("l_returnflag").as("flag"),
           col("l_extendedprice").as("v"))
-        // lineitemSpread (r16): parallelizes the decimal moment
+        // Tables.spread (r16): parallelizes the decimal moment
         // partial aggregate (single-task scan otherwise); the probe
         // side `li` stays a plain scan — it only projects + filters
-        val stats = Tables.lineitemSpread(s, d)
+        val stats = Tables.spread(s, d, "lineitem")
           .groupBy(col("l_returnflag").as("flag"))
           .agg(sum(dec).cast("double").as("s1"),
             sum((dec * dec).cast("decimal(38,4)")).cast("double").as("s2"),
@@ -1190,12 +1190,12 @@ object QueriesRelational {
         // of them tripled the aggregation state and the per-group sort;
         // the array form computes all three ranks from one buffer
         // (measured 4.0 s -> ~1.6 s at sf0.1).
-        // lineitemSpread (r16): the single-task scan serialized the
+        // Tables.spread (r16): the single-task scan serialized the
         // whole buffer+sort partial aggregate on one core; the spread
         // parallelizes it (merge concatenates partial buffers and
         // sorts the same multiset — order-independent, so the answer
         // is unchanged)
-        Tables.lineitemSpread(s, d)
+        Tables.spread(s, d, "lineitem")
           .groupBy(col("l_returnflag"))
           .agg(
             expr("percentile(l_extendedprice, array(0.5, 0.9, 0.99))")
@@ -1857,11 +1857,11 @@ object QueriesRelational {
         val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
           "o_orderpriority", "o_orderdate")
         val pairs = for { a <- cols; b <- cols if a != b } yield (a, b)
-        // ordersSpread: the ×20 column-pair explode ran in the single
+        // Tables.spread: the ×20 column-pair explode ran in the single
         // scan task and wrote its 55 MB exchange serially (measured
         // 5.12 -> 2.68 s; the distinct aggregate is exact integers, so
         // partitioning cannot change the result)
-        val long = Tables.ordersSpread(s, d)
+        val long = Tables.spread(s, d, "orders")
           .select(explode(array(pairs.map { case (a, b) =>
             struct(lit(a).as("lhs"), lit(b).as("rhs"),
               col(a).cast("string").as("va"), col(b).cast("string").as("vb"))
@@ -1907,10 +1907,10 @@ object QueriesRelational {
         val combos = cols.map(Seq(_)) ++
           (for { i <- cols.indices; j <- i + 1 until cols.size }
             yield Seq(cols(i), cols(j)))
-        // ordersSpread: same serial-explode fix as q_profile_fd_discovery
+        // Tables.spread: same serial-explode fix as q_profile_fd_discovery
         // (measured 3.26 -> 1.97 s); the count(*) side below stays a
         // plain scan — it reads no values
-        val long = Tables.ordersSpread(s, d)
+        val long = Tables.spread(s, d, "orders")
           .select(explode(array(combos.map { c =>
             struct(lit(c.mkString("+")).as("combo"),
               concat_ws("\u0001", c.map(col(_).cast("string")): _*)
@@ -2205,7 +2205,7 @@ object QueriesRelational {
     // thresholds; the cumulative window partitions by group over the
     // bounded histogram.
     Q("q_agg_weighted_percentile_grouped",
-      // lineitemSpread was MEASURED here in r16 and reverted (flat,
+      // Tables.spread was MEASURED here in r16 and reverted (flat,
       // 3.16 -> 3.13 s): the decimal-weight histogram partial-agg
       // reduces well map-side, so the exchange buys nothing
       (s, d) => graft.operators.Percentiles.weightedLowerQuantilesByGroup(
@@ -2238,10 +2238,10 @@ object QueriesRelational {
     // truth-exact AND bit-identical with zero stabilization — every
     // statistic is one fixed parenthesization over exact operands.
     Q("q_profile_moments",
-      // lineitemSpread (r16): parallelizes the decimal power-sum
+      // Tables.spread (r16): parallelizes the decimal power-sum
       // partial aggregate off the single-task scan
       (s, d) => graft.operators.Profile.momentsByGroup(
-          Tables.lineitemSpread(s, d), Seq("l_returnflag"), "l_quantity")
+          Tables.spread(s, d, "lineitem"), Seq("l_returnflag"), "l_quantity")
         .orderBy(col("l_returnflag")),
       Some("""WITH m AS (
              |  SELECT l_returnflag, count(*) AS n,
@@ -2286,10 +2286,10 @@ object QueriesRelational {
     // reproducible); closing arithmetic stabilized at 12 decimals
     // like the global matrix.
     Q("q_a9_corr_grouped",
-      // lineitemSpread (r16): parallelizes the decimal moment partial
+      // Tables.spread (r16): parallelizes the decimal moment partial
       // aggregate off the single-task scan
       (s, d) => graft.operators.Correlation.pairByGroup(
-          Tables.lineitemSpread(s, d), Seq("l_returnflag"),
+          Tables.spread(s, d, "lineitem"), Seq("l_returnflag"),
           "l_quantity", "l_extendedprice")
         .orderBy(col("l_returnflag")),
       Some {

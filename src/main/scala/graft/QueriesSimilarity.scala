@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{HashFns, TextFns}
-import graft.operators.{Dedup, Sampling, Similarity, Windows}
+import graft.operators.{Dedup, Ivf, Pq, Sampling, Similarity, Windows}
 import graft.sources.Tables
 
 /** Deduplication + similarity-search operators over `documents` (text)
@@ -25,13 +25,6 @@ object QueriesSimilarity {
   private val K = 8 // minhash signature width
   private val R = 2 // rows per LSH band -> 4 bands
 
-  /** DuckDB mirror of TextFns.normalize (same string as QueriesText's
-    * normSql — duplicated because each file keeps its oracles
-    * self-contained).
-    */
-  private val textNormSql =
-    "trim(regexp_replace(regexp_replace(lower(text),'[^a-z0-9 ]','','g'),' +',' ','g'))"
-
   /** DuckDB mirror of Similarity.charShingles(k=5). */
   private val shinglesSql =
     """SELECT doc_id, substr(text, CAST(i AS INT), 5) AS shingle
@@ -45,6 +38,29 @@ object QueriesSimilarity {
   private def sigSelectSql: String =
     (0 until K).map(i =>
       s"MIN(${HashFns.hashFamilySql("h", i)}) AS mh$i").mkString(",\n  ")
+
+  /** md5 digest of every word 3-gram of each document → (doc_id, h),
+    * repeats kept; `toked` carries (doc_id, toks). The element frame
+    * of every word-3-gram set join (Jaccard, containment, prefix
+    * report), so all of them hash the same elements.
+    */
+  private def hashedTrigrams(toked: DataFrame): DataFrame =
+    Similarity.hashedShingles(
+      Similarity.wordNgrams(toked, "doc_id", "toks", 3)
+        .withColumnRenamed("ngram", "shingle"), "doc_id")
+
+  /** q_sim_containment_indexed's banded quote join, unordered — its
+    * `_sampled` twin filters this same frame. spreadById (r16, Finding
+    * 3): the ngram explode + md5 leg parallelizes; containmentBanded's
+    * distinct/sizes absorb the doc_id partitioning.
+    */
+  private def containmentIndexed(s: SparkSession, d: String): DataFrame = {
+    val toked = Similarity.spreadById(
+      Tables.documents(s, d).select(col("doc_id"),
+        TextFns.tokens(col("text")).as("toks")), "doc_id")
+    graft.operators.SetJoin
+      .containmentBanded(hashedTrigrams(toked), "doc_id", "h", 0.9)
+  }
 
   /** The EXACT all-pairs containment brute force over hashed word
     * 3-grams — shared verbatim by q_sim_containment (the exact
@@ -64,9 +80,7 @@ object QueriesSimilarity {
     s"""WITH corpus AS (
        |  $corpusSql),
        |t AS (
-       |  SELECT doc_id, string_split(
-       |    trim(regexp_replace(regexp_replace(lower(text),
-       |      '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')), ' ') AS toks
+       |  SELECT doc_id, ${TextFns.tokensSql("text")} AS toks
        |  FROM corpus),
        |ng AS (
        |  SELECT DISTINCT doc_id,
@@ -107,7 +121,7 @@ object QueriesSimilarity {
        |  UNION ALL
        |  SELECT doc_id + 100000000 AS doc_id,
        |         array_to_string(toks[1:12], ' ') AS text
-       |  FROM (SELECT doc_id, string_split($textNormSql, ' ') AS toks
+       |  FROM (SELECT doc_id, ${TextFns.tokensSql("text")} AS toks
        |        FROM documents)
        |  WHERE doc_id % 13 = 0 AND len(toks) >= 80""".stripMargin
 
@@ -281,7 +295,7 @@ object QueriesSimilarity {
     */
   private lazy val containmentLakeOracleSql: String =
     s"""WITH tok AS (
-       |  SELECT doc_id, string_split($textNormSql, ' ') AS toks
+       |  SELECT doc_id, ${TextFns.tokensSql("text")} AS toks
        |  FROM documents),
        |batch AS (
        |  SELECT doc_id + 200000000 AS doc_id,
@@ -341,7 +355,7 @@ object QueriesSimilarity {
     * scan — the q_sim_embedding_neardup two-phase convention).
     */
   private def lshKnnEdges(s: SparkSession, d: String): DataFrame = {
-    // embeddingsSpread was MEASURED here in r16 and reverted: it
+    // Tables.spread was MEASURED here in r16 and reverted: it
     // helped clustering_coeff_lsh (4.87 -> 4.09 s) but regressed the
     // other four _lsh twins (triangles 3.10 -> 3.57, label_prop
     // 0.85 -> 1.18, kcore 1.51 -> 1.70, pagerank 3.81 -> 3.96 at
@@ -397,7 +411,7 @@ object QueriesSimilarity {
     */
   private def exactKnnEdges(s: SparkSession, d: String,
                             sampled: Boolean = false): DataFrame = {
-    // embeddingsSpread (full path only): the quadratic crossJoin
+    // Tables.spread (full path only): the quadratic crossJoin
     // inherits the left side's partitioning, so an unspread
     // single-file scan ran the whole n² cosine pass in ONE task
     // (measured: q_graph_kcore 5.54 -> 1.84 s at sf0.1, and the kNN
@@ -406,7 +420,8 @@ object QueriesSimilarity {
     // at sf0.1 and the spread's exchange + task fan-out REGRESSED all
     // five _sampled faces ~1.3-1.6x (OPTIMIZATION_r15.md).
     val base0 =
-      if (sampled) Tables.embeddings(s, d) else Tables.embeddingsSpread(s, d)
+      if (sampled) Tables.embeddings(s, d)
+      else Tables.spread(s, d, "embeddings")
     val base = if (sampled) graphSample(base0) else base0
     val e = base.withColumn("nrm", Similarity.norm(col("embedding")))
     val a = e.select(col("vec_id").as("src"),
@@ -653,79 +668,176 @@ object QueriesSimilarity {
        |  SELECT e.src, r.lbl FROM e JOIN reach r ON r.id = e.dst)""".stripMargin
   }
 
+  /** The prelude of every embedding-index query (the five IVF-family
+    * bodies and semdedup): `e` = embeddings with `nrm`, and the query
+    * batch vec_id ∈ [10, 20) projected to (qid, qe, qnrm).
+    *
+    * Tables.spread was MEASURED on these bodies in r16 and reverted:
+    * these multi-consumer index pipelines (separate write jobs between
+    * consumers) re-execute the spread exchange per job — exchange
+    * reuse does not span jobs — so it regressed the whole ANN family
+    * (ivf 0.82 -> 1.81 s, ivf_lake 1.65 -> 4.32, ivf_incremental
+    * 1.90 -> 5.00, ivfpq 3.07 -> 4.68, ivfpq_incremental 5.86 -> 8.35,
+    * semdedup 1.26 -> 1.81, and q_sim_ann_pq 3.02 -> 3.14 at
+    * sf0.1/32c). So all of them read the plain scan.
+    */
+  private def annInputs(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val e = Tables.embeddings(s, d)
+      .withColumn("nrm", Similarity.norm(col("embedding")))
+    val queries = e.filter(col("vec_id") >= 10 && col("vec_id") < 20)
+      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
+        col("nrm").as("qnrm"))
+    (e, queries)
+  }
+
+  /** DuckDB mirror of [[Ivf.lloydCentroids]] plus the scoring half of
+    * [[Ivf.assign]] — the CTEs `e, seeds, s0, a0, dims, cents0, cents,
+    * scored`, without the leading WITH. Shared by every IVF-family
+    * oracle and semdedup's, so the trained index has one definition;
+    * each caller appends its own `assign` and search tail.
+    *
+    * `seedPred` picks the seed rows of `e` (the first 8 vectors, or
+    * semdedup's corpus-sized k). `trainPred` restricts the LLOYD
+    * TRAINING population only — `scored` still covers the whole
+    * corpus: with `vec_id < 250` it replays the frozen-centroid
+    * REBUILD that the incremental queries' append paths must
+    * hash-match.
+    */
+  private def ivfCentroidCtes(seedPred: String, trainPred: String): String =
+    s"""e AS (
+       |  SELECT vec_id, embedding,
+       |         ${normSql("embedding")} AS nrm
+       |  FROM embeddings),
+       |seeds AS (
+       |  SELECT vec_id AS cid, embedding AS cvec, nrm AS cnrm
+       |  FROM e WHERE $seedPred),
+       |s0 AS (
+       |  SELECT e.vec_id, e.embedding, c.cid,
+       |    ${dotSql("e.embedding", "c.cvec")} / (e.nrm * c.cnrm)
+       |      AS csim
+       |  FROM (SELECT * FROM e WHERE $trainPred) e, seeds c),
+       |a0 AS (
+       |  SELECT vec_id, embedding, cid
+       |  FROM (SELECT *, row_number() OVER (
+       |          PARTITION BY vec_id ORDER BY csim DESC, cid) AS rn
+       |        FROM s0) WHERE rn = 1),
+       |dims AS (
+       |  SELECT cid, CAST(i AS INT) AS i,
+       |    round_even(avg(CAST(embedding[CAST(i AS INT)] AS DOUBLE))
+       |      * 1000000.0, 0) / 1000000.0 AS cv
+       |  FROM a0, unnest(range(1, len(embedding) + 1)) t(i)
+       |  GROUP BY cid, i),
+       |cents0 AS (
+       |  SELECT cid, list(cv ORDER BY i) AS cvec FROM dims
+       |  GROUP BY cid),
+       |cents AS (
+       |  SELECT cid, cvec, ${normSql("cvec")} AS cnrm FROM cents0),
+       |scored AS (
+       |  SELECT e.vec_id, e.embedding, e.nrm, c.cid,
+       |    ${dotSql("e.embedding", "c.cvec")} / (e.nrm * c.cnrm)
+       |      AS csim
+       |  FROM e, cents c)""".stripMargin
+
+  /** DuckDB mirror of Similarity.adaptiveSeedCount as a seed predicate:
+    * vec_id < max(8, ⌈√n⌉).
+    */
+  private val adaptiveSeedPredSql: String =
+    "vec_id < (SELECT greatest(8, CAST(ceil(sqrt(count(*))) AS BIGINT))" +
+      " FROM embeddings)"
+
+  /** The IVF-family tail of [[ivfCentroidCtes]] ([[Ivf.assign]] and
+    * the query batch): `assign` keeps each vector's best-scored cell
+    * (ties to the lowest cid) as (cell, nid, ce, cenrm); `queries` is
+    * vec_id ∈ [10, 20) as (qid, qe, qnrm).
+    */
+  private val ivfAssignCtes: String =
+    """assign AS (
+      |  SELECT cid AS cell, vec_id AS nid, embedding AS ce,
+      |         nrm AS cenrm
+      |  FROM (SELECT *, row_number() OVER (
+      |          PARTITION BY vec_id ORDER BY csim DESC, cid) AS rn
+      |        FROM scored) WHERE rn = 1),
+      |queries AS (
+      |  SELECT vec_id AS qid, embedding AS qe, nrm AS qnrm
+      |  FROM e WHERE vec_id >= 10 AND vec_id < 20)""".stripMargin
+
+  /** DuckDB mirror of [[Pq.codebooks]] + [[Pq.encode]] at m = 16, d/m = 4,
+    * k = 16 — the CTEs `sv, pseeds, ps0, pa0, pdims, books, enc0, codes`.
+    * `trainPred` restricts the codebook training population only;
+    * encoding covers the whole corpus.
+    */
+  private def pqCodebookCtes(trainPred: String): String =
+    s"""sv AS (
+       |  SELECT vec_id, CAST(j AS INT) AS sub,
+       |    list_transform(
+       |      embedding[CAST(j*4+1 AS INT):CAST(j*4+4 AS INT)],
+       |      x -> CAST(x AS DOUBLE)) AS svec
+       |  FROM embeddings, unnest(range(16)) t(j)),
+       |pseeds AS (
+       |  SELECT sub, vec_id AS cid, svec AS cvec
+       |  FROM sv WHERE vec_id < 16),
+       |ps0 AS (
+       |  SELECT sv.vec_id, sv.sub, sv.svec, c.cid,
+       |    ${dotSql("sv.svec", "sv.svec")}
+       |      - 2 * ${dotSql("sv.svec", "c.cvec")}
+       |      + ${dotSql("c.cvec", "c.cvec")} AS dd
+       |  FROM (SELECT * FROM sv WHERE $trainPred) sv
+       |  JOIN pseeds c USING (sub)),
+       |pa0 AS (
+       |  SELECT vec_id, sub, svec, cid FROM (
+       |    SELECT *, row_number() OVER (
+       |      PARTITION BY vec_id, sub ORDER BY dd, cid) AS rn
+       |    FROM ps0) WHERE rn = 1),
+       |pdims AS (
+       |  SELECT sub, cid, CAST(i AS INT) AS i,
+       |    round_even(avg(svec[CAST(i AS INT)]) * 1000000.0, 0)
+       |      / 1000000.0 AS cv
+       |  FROM pa0, unnest(range(1, 5)) t(i)
+       |  GROUP BY sub, cid, i),
+       |books AS (
+       |  SELECT sub, cid, list(cv ORDER BY i) AS cvec
+       |  FROM pdims GROUP BY sub, cid),
+       |enc0 AS (
+       |  SELECT sv.vec_id, sv.sub, b.cid,
+       |    ${dotSql("sv.svec", "sv.svec")}
+       |      - 2 * ${dotSql("sv.svec", "b.cvec")}
+       |      + ${dotSql("b.cvec", "b.cvec")} AS dd
+       |  FROM sv JOIN books b USING (sub)),
+       |codes AS (
+       |  SELECT vec_id, sub, cid AS code FROM (
+       |    SELECT *, row_number() OVER (
+       |      PARTITION BY vec_id, sub ORDER BY dd, cid) AS rn
+       |    FROM enc0) WHERE rn = 1)""".stripMargin
+
   /** Shared DuckDB replay of the WHOLE IVF pipeline (train ->
     * assign -> probe -> score -> top-3). Used VERBATIM (trainPred =
     * TRUE) by both q_sim_ann_ivf and q_sim_ann_ivf_lake: same answer,
     * different physical plan (the lake variant serves the index from
     * cell-partitioned parquet with partition pruning) — the
-    * q_u2_dedup_keep_first_agg shared-oracle precedent.
-    *
-    * `trainPred` restricts the LLOYD TRAINING population only (the
-    * final assignment still covers the whole corpus): with
-    * `vec_id < 250` it replays the frozen-centroid REBUILD that
-    * q_sim_ann_ivf_incremental's append path must hash-match.
+    * q_u2_dedup_keep_first_agg shared-oracle precedent. With
+    * `vec_id < 250` it is q_sim_ann_ivf_incremental's rebuild.
     */
   private def ivfOracleSql(trainPred: String = "TRUE"): String =
-    s"""WITH e AS (
-              |  SELECT vec_id, embedding,
-              |         ${normSql("embedding")} AS nrm
-              |  FROM embeddings),
-              |seeds AS (
-              |  SELECT vec_id AS cid, embedding AS cvec, nrm AS cnrm
-              |  FROM e WHERE vec_id < 8),
-              |s0 AS (
-              |  SELECT e.vec_id, e.embedding, c.cid,
-              |    ${dotSql("e.embedding", "c.cvec")} / (e.nrm * c.cnrm)
-              |      AS csim
-              |  FROM (SELECT * FROM e WHERE $trainPred) e, seeds c),
-              |a0 AS (
-              |  SELECT vec_id, embedding, cid
-              |  FROM (SELECT *, row_number() OVER (
-              |          PARTITION BY vec_id ORDER BY csim DESC, cid) AS rn
-              |        FROM s0) WHERE rn = 1),
-              |dims AS (
-              |  SELECT cid, CAST(i AS INT) AS i,
-              |    round_even(avg(CAST(embedding[CAST(i AS INT)] AS DOUBLE))
-              |      * 1000000.0, 0) / 1000000.0 AS cv
-              |  FROM a0, unnest(range(1, len(embedding) + 1)) t(i)
-              |  GROUP BY cid, i),
-              |cents0 AS (
-              |  SELECT cid, list(cv ORDER BY i) AS cvec FROM dims
-              |  GROUP BY cid),
-              |cents AS (
-              |  SELECT cid, cvec, ${normSql("cvec")} AS cnrm FROM cents0),
-              |scored AS (
-              |  SELECT e.vec_id, e.embedding, e.nrm, c.cid,
-              |    ${dotSql("e.embedding", "c.cvec")} / (e.nrm * c.cnrm)
-              |      AS csim
-              |  FROM e, cents c),
-              |assign AS (
-              |  SELECT cid AS cell, vec_id AS nid, embedding AS ce,
-              |         nrm AS cenrm
-              |  FROM (SELECT *, row_number() OVER (
-              |          PARTITION BY vec_id ORDER BY csim DESC, cid) AS rn
-              |        FROM scored) WHERE rn = 1),
-              |queries AS (
-              |  SELECT vec_id AS qid, embedding AS qe, nrm AS qnrm
-              |  FROM e WHERE vec_id >= 10 AND vec_id < 20),
-              |probes AS (
-              |  SELECT qid, qe, qnrm, cell FROM (
-              |    SELECT q.qid, q.qe, q.qnrm, c.cid AS cell,
-              |      ${dotSql("q.qe", "c.cvec")} / (q.qnrm * c.cnrm) AS psim,
-              |      row_number() OVER (PARTITION BY q.qid
-              |        ORDER BY ${dotSql("q.qe", "c.cvec")} / (q.qnrm * c.cnrm)
-              |          DESC, c.cid) AS rk
-              |    FROM queries q, cents c) WHERE rk <= 2),
-              |hits AS (
-              |  SELECT p.qid, a.nid,
-              |    ${dotSql("p.qe", "a.ce")} / (p.qnrm * a.cenrm) AS cos_sim
-              |  FROM probes p JOIN assign a USING (cell)
-              |  WHERE p.qid <> a.nid)
-              |SELECT qid, rk, nid FROM (
-              |  SELECT qid, nid, row_number() OVER (
-              |    PARTITION BY qid ORDER BY cos_sim DESC, nid) AS rk
-              |  FROM hits)
-              |WHERE rk <= 3 ORDER BY qid, rk""".stripMargin
+    s"""WITH ${ivfCentroidCtes("vec_id < 8", trainPred)},
+       |$ivfAssignCtes,
+       |probes AS (
+       |  SELECT qid, qe, qnrm, cell FROM (
+       |    SELECT q.qid, q.qe, q.qnrm, c.cid AS cell,
+       |      ${dotSql("q.qe", "c.cvec")} / (q.qnrm * c.cnrm) AS psim,
+       |      row_number() OVER (PARTITION BY q.qid
+       |        ORDER BY ${dotSql("q.qe", "c.cvec")} / (q.qnrm * c.cnrm)
+       |          DESC, c.cid) AS rk
+       |    FROM queries q, cents c) WHERE rk <= 2),
+       |hits AS (
+       |  SELECT p.qid, a.nid,
+       |    ${dotSql("p.qe", "a.ce")} / (p.qnrm * a.cenrm) AS cos_sim
+       |  FROM probes p JOIN assign a USING (cell)
+       |  WHERE p.qid <> a.nid)
+       |SELECT qid, rk, nid FROM (
+       |  SELECT qid, nid, row_number() OVER (
+       |    PARTITION BY qid ORDER BY cos_sim DESC, nid) AS rk
+       |  FROM hits)
+       |WHERE rk <= 3 ORDER BY qid, rk""".stripMargin
 
   /** Shared DuckDB replay of the full IVFPQ composition (both index
     * constructions + the three-stage search). `trainPred` restricts
@@ -736,129 +848,50 @@ object QueriesSimilarity {
     * hash-match.
     */
   private def ivfpqOracleSql(trainPred: String = "TRUE"): String =
-    s"""WITH e AS (
-              |  SELECT vec_id, embedding,
-              |         ${normSql("embedding")} AS nrm
-              |  FROM embeddings),
-              |seeds AS (
-              |  SELECT vec_id AS cid, embedding AS cvec, nrm AS cnrm
-              |  FROM e WHERE vec_id < 8),
-              |s0 AS (
-              |  SELECT e.vec_id, e.embedding, c.cid,
-              |    ${dotSql("e.embedding", "c.cvec")} / (e.nrm * c.cnrm)
-              |      AS csim
-              |  FROM (SELECT * FROM e WHERE $trainPred) e, seeds c),
-              |a0 AS (
-              |  SELECT vec_id, embedding, cid
-              |  FROM (SELECT *, row_number() OVER (
-              |          PARTITION BY vec_id ORDER BY csim DESC, cid) AS rn
-              |        FROM s0) WHERE rn = 1),
-              |dims AS (
-              |  SELECT cid, CAST(i AS INT) AS i,
-              |    round_even(avg(CAST(embedding[CAST(i AS INT)] AS DOUBLE))
-              |      * 1000000.0, 0) / 1000000.0 AS cv
-              |  FROM a0, unnest(range(1, len(embedding) + 1)) t(i)
-              |  GROUP BY cid, i),
-              |cents0 AS (
-              |  SELECT cid, list(cv ORDER BY i) AS cvec FROM dims
-              |  GROUP BY cid),
-              |cents AS (
-              |  SELECT cid, cvec, ${normSql("cvec")} AS cnrm FROM cents0),
-              |scored AS (
-              |  SELECT e.vec_id, e.embedding, e.nrm, c.cid,
-              |    ${dotSql("e.embedding", "c.cvec")} / (e.nrm * c.cnrm)
-              |      AS csim
-              |  FROM e, cents c),
-              |assign AS (
-              |  SELECT cid AS cell, vec_id AS nid, embedding AS ce,
-              |         nrm AS cenrm
-              |  FROM (SELECT *, row_number() OVER (
-              |          PARTITION BY vec_id ORDER BY csim DESC, cid) AS rn
-              |        FROM scored) WHERE rn = 1),
-              |sv AS (
-              |  SELECT vec_id, CAST(j AS INT) AS sub,
-              |    list_transform(
-              |      embedding[CAST(j*4+1 AS INT):CAST(j*4+4 AS INT)],
-              |      x -> CAST(x AS DOUBLE)) AS svec
-              |  FROM embeddings, unnest(range(16)) t(j)),
-              |pseeds AS (
-              |  SELECT sub, vec_id AS cid, svec AS cvec
-              |  FROM sv WHERE vec_id < 16),
-              |ps0 AS (
-              |  SELECT sv.vec_id, sv.sub, sv.svec, c.cid,
-              |    ${dotSql("sv.svec", "sv.svec")}
-              |      - 2 * ${dotSql("sv.svec", "c.cvec")}
-              |      + ${dotSql("c.cvec", "c.cvec")} AS dd
-              |  FROM (SELECT * FROM sv WHERE $trainPred) sv JOIN pseeds c USING (sub)),
-              |pa0 AS (
-              |  SELECT vec_id, sub, svec, cid FROM (
-              |    SELECT *, row_number() OVER (
-              |      PARTITION BY vec_id, sub ORDER BY dd, cid) AS rn
-              |    FROM ps0) WHERE rn = 1),
-              |pdims AS (
-              |  SELECT sub, cid, CAST(i AS INT) AS i,
-              |    round_even(avg(svec[CAST(i AS INT)]) * 1000000.0, 0)
-              |      / 1000000.0 AS cv
-              |  FROM pa0, unnest(range(1, 5)) t(i)
-              |  GROUP BY sub, cid, i),
-              |books AS (
-              |  SELECT sub, cid, list(cv ORDER BY i) AS cvec
-              |  FROM pdims GROUP BY sub, cid),
-              |enc0 AS (
-              |  SELECT sv.vec_id, sv.sub, b.cid,
-              |    ${dotSql("sv.svec", "sv.svec")}
-              |      - 2 * ${dotSql("sv.svec", "b.cvec")}
-              |      + ${dotSql("b.cvec", "b.cvec")} AS dd
-              |  FROM sv JOIN books b USING (sub)),
-              |codes AS (
-              |  SELECT vec_id, sub, cid AS code FROM (
-              |    SELECT *, row_number() OVER (
-              |      PARTITION BY vec_id, sub ORDER BY dd, cid) AS rn
-              |    FROM enc0) WHERE rn = 1),
-              |queries AS (
-              |  SELECT vec_id AS qid, embedding AS qe, nrm AS qnrm
-              |  FROM e WHERE vec_id >= 10 AND vec_id < 20),
-              |probes AS (
-              |  SELECT qid, cell FROM (
-              |    SELECT q.qid, c.cid AS cell,
-              |      row_number() OVER (PARTITION BY q.qid
-              |        ORDER BY ${dotSql("q.qe", "c.cvec")} / (q.qnrm * c.cnrm)
-              |          DESC, c.cid) AS rk
-              |    FROM queries q, cents c) WHERE rk <= 2),
-              |members AS (
-              |  SELECT p.qid, a.nid FROM probes p JOIN assign a USING (cell)
-              |  WHERE p.qid <> a.nid),
-              |qsub AS (
-              |  SELECT vec_id AS qid, sub, svec FROM sv
-              |  WHERE vec_id >= 10 AND vec_id < 20),
-              |tab AS (
-              |  SELECT q.qid, q.sub, b.cid AS code,
-              |    ${dotSql("q.svec", "b.cvec")} AS part
-              |  FROM qsub q JOIN books b USING (sub)),
-              |adc AS (
-              |  SELECT m.qid, m.nid,
-              |    list_sum(list(t.part ORDER BY t.sub)) AS adc
-              |  FROM members m
-              |  JOIN codes c ON c.vec_id = m.nid
-              |  JOIN tab t ON t.qid = m.qid AND t.sub = c.sub
-              |    AND t.code = c.code
-              |  GROUP BY m.qid, m.nid),
-              |cand AS (
-              |  SELECT qid, nid FROM (
-              |    SELECT qid, nid, row_number() OVER (
-              |      PARTITION BY qid ORDER BY adc DESC, nid) AS rk
-              |    FROM adc) WHERE rk <= 20),
-              |ex AS (
-              |  SELECT cand.qid, cand.nid,
-              |    ${dotSql("q.qe", "a.ce")} / (q.qnrm * a.cenrm) AS cos_sim
-              |  FROM cand
-              |  JOIN queries q USING (qid)
-              |  JOIN assign a ON a.nid = cand.nid)
-              |SELECT qid, rk, nid FROM (
-              |  SELECT qid, nid, row_number() OVER (
-              |    PARTITION BY qid ORDER BY cos_sim DESC, nid) AS rk
-              |  FROM ex)
-              |WHERE rk <= 3 ORDER BY qid, rk""".stripMargin
+    s"""WITH ${ivfCentroidCtes("vec_id < 8", trainPred)},
+       |$ivfAssignCtes,
+       |${pqCodebookCtes(trainPred)},
+       |probes AS (
+       |  SELECT qid, cell FROM (
+       |    SELECT q.qid, c.cid AS cell,
+       |      row_number() OVER (PARTITION BY q.qid
+       |        ORDER BY ${dotSql("q.qe", "c.cvec")} / (q.qnrm * c.cnrm)
+       |          DESC, c.cid) AS rk
+       |    FROM queries q, cents c) WHERE rk <= 2),
+       |members AS (
+       |  SELECT p.qid, a.nid FROM probes p JOIN assign a USING (cell)
+       |  WHERE p.qid <> a.nid),
+       |qsub AS (
+       |  SELECT vec_id AS qid, sub, svec FROM sv
+       |  WHERE vec_id >= 10 AND vec_id < 20),
+       |tab AS (
+       |  SELECT q.qid, q.sub, b.cid AS code,
+       |    ${dotSql("q.svec", "b.cvec")} AS part
+       |  FROM qsub q JOIN books b USING (sub)),
+       |adc AS (
+       |  SELECT m.qid, m.nid,
+       |    list_sum(list(t.part ORDER BY t.sub)) AS adc
+       |  FROM members m
+       |  JOIN codes c ON c.vec_id = m.nid
+       |  JOIN tab t ON t.qid = m.qid AND t.sub = c.sub
+       |    AND t.code = c.code
+       |  GROUP BY m.qid, m.nid),
+       |cand AS (
+       |  SELECT qid, nid FROM (
+       |    SELECT qid, nid, row_number() OVER (
+       |      PARTITION BY qid ORDER BY adc DESC, nid) AS rk
+       |    FROM adc) WHERE rk <= 20),
+       |ex AS (
+       |  SELECT cand.qid, cand.nid,
+       |    ${dotSql("q.qe", "a.ce")} / (q.qnrm * a.cenrm) AS cos_sim
+       |  FROM cand
+       |  JOIN queries q USING (qid)
+       |  JOIN assign a ON a.nid = cand.nid)
+       |SELECT qid, rk, nid FROM (
+       |  SELECT qid, nid, row_number() OVER (
+       |    PARTITION BY qid ORDER BY cos_sim DESC, nid) AS rk
+       |  FROM ex)
+       |WHERE rk <= 3 ORDER BY qid, rk""".stripMargin
 
   val qs: Seq[Q] = Seq(
 
@@ -939,11 +972,11 @@ object QueriesSimilarity {
     // ---------------------------------------------------- MinHash signature
     Q("q_sim_minhash_signature",
       (s, d) => {
-        // documentsSpread: the char-5 shingle explode + md5 is the whole
+        // Tables.spread: the char-5 shingle explode + md5 is the whole
         // query and the minhash groupBy(doc_id) reuses the spread's
         // partitioning (measured 2.18 -> 1.20 s, OPTIMIZATION_r15.md)
         val hs = Similarity.hashedShingles(
-          Similarity.charShingles(Tables.documentsSpread(s, d),
+          Similarity.charShingles(Tables.spread(s, d, "documents"),
             "doc_id", "text", 5), "doc_id")
         Similarity.minhashFromHashes(hs, "doc_id", K).orderBy(col("doc_id"))
       },
@@ -977,9 +1010,7 @@ object QueriesSimilarity {
         val toked = Similarity.spreadById(
           Tables.documents(s, d).select(col("doc_id"),
             TextFns.tokens(col("text")).as("toks")), "doc_id")
-        val hs = Similarity.hashedShingles(
-          Similarity.wordNgrams(toked, "doc_id", "toks", 3)
-            .withColumnRenamed("ngram", "shingle"), "doc_id").cache()
+        val hs = hashedTrigrams(toked).cache()
         val pairs = graft.operators.SetJoin
           .jaccardSelfJoin(hs, "doc_id", "h", 0.6)
         val sig = Similarity.minhashFromHashes(hs, "doc_id", K)
@@ -1001,9 +1032,7 @@ object QueriesSimilarity {
           .map(i => s"CASE WHEN a.mh$i = b.mh$i THEN 1 ELSE 0 END")
           .mkString(" + ")
         s"""WITH t AS (
-           |  SELECT doc_id, string_split(
-           |    trim(regexp_replace(regexp_replace(lower(text),
-           |      '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')), ' ') AS toks
+           |  SELECT doc_id, ${TextFns.tokensSql("text")} AS toks
            |  FROM documents),
            |ng AS (
            |  SELECT DISTINCT doc_id,
@@ -1861,27 +1890,13 @@ object QueriesSimilarity {
     // broadcast join + one (cell, dim) aggregation.
     Q("q_sim_ann_ivf",
       (s, d) => {
-        import graft.operators.Ivf
-        // embeddingsSpread was MEASURED here in r16 and reverted: these
-        // multi-consumer index pipelines (separate write jobs between
-        // consumers) re-execute the spread exchange per job — exchange
-        // reuse does not span jobs — so it regressed the whole ANN
-        // family (ivf 0.82 -> 1.81 s, ivf_lake 1.65 -> 4.32,
-        // ivf_incremental 1.90 -> 5.00, ivfpq 3.07 -> 4.68,
-        // ivfpq_incremental 5.86 -> 8.35, semdedup 1.26 -> 1.81 at
-        // sf0.1/32c)
-        val e = Tables.embeddings(s, d)
-          .withColumn("nrm", Similarity.norm(col("embedding")))
+        val (e, queries) = annInputs(s, d)
         // index construction + search factored into operators/Ivf so
         // SimilaritySpec's recall curve measures the SAME index; 8
         // seeds and nProbe=2 pinned here because the oracle replays
         // them (production sizing: Similarity.adaptiveSeedCount)
         val cents = Ivf.lloydCentroids(e, nSeeds = 8)
-        val assigned = Ivf.assign(e, cents)
-        val queries = e.filter(col("vec_id") >= 10 && col("vec_id") < 20)
-          .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-            col("nrm").as("qnrm"))
-        Ivf.search(queries, cents, assigned, nProbe = 2, k = 3)
+        Ivf.search(queries, cents, Ivf.assign(e, cents), nProbe = 2, k = 3)
       },
       Some(ivfOracleSql())),
 
@@ -1900,47 +1915,19 @@ object QueriesSimilarity {
     // differs.
     Q("q_sim_ann_ivf_lake",
       (s, d) => {
-        import graft.operators.Ivf
-        // embeddingsSpread was MEASURED here in r16 and reverted: these
-        // multi-consumer index pipelines (separate write jobs between
-        // consumers) re-execute the spread exchange per job — exchange
-        // reuse does not span jobs — so it regressed the whole ANN
-        // family (ivf 0.82 -> 1.81 s, ivf_lake 1.65 -> 4.32,
-        // ivf_incremental 1.90 -> 5.00, ivfpq 3.07 -> 4.68,
-        // ivfpq_incremental 5.86 -> 8.35, semdedup 1.26 -> 1.81 at
-        // sf0.1/32c)
-        val e = Tables.embeddings(s, d)
-          .withColumn("nrm", Similarity.norm(col("embedding")))
+        val (e, queries) = annInputs(s, d)
         val cents = Ivf.lloydCentroids(e, nSeeds = 8)
         val dir = java.nio.file.Files
           .createTempDirectory("graft_ivf_lake").toString
         Ivf.assign(e, cents).write.mode("overwrite")
           .partitionBy("cell").parquet(dir)
-        val queries = e.filter(col("vec_id") >= 10 && col("vec_id") < 20)
-          .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-            col("nrm").as("qnrm"))
-        val probes = Windows.topKPerGroup(
-          queries.crossJoin(broadcast(cents))
-            .select(col("qid"), col("qe"), col("qnrm"),
-              col("cid").as("cell"),
-              (Similarity.dot(col("qe"), col("cvec"))
-                / (col("qnrm") * col("cnrm"))).as("psim")),
-          Seq(col("qid")), Seq(col("psim").desc, col("cell")), 2)
-        val cells = probes.select(col("cell")).distinct()
-          .collect().map(_.getLong(0))
+        val cells = Ivf.probe(queries, cents, nProbe = 2)
+          .select(col("cell")).distinct().collect().map(_.getLong(0))
         val served = s.read.parquet(dir)
           .filter(col("cell").isin(cells: _*))
           .select(col("cell").cast("long").as("cell"), col("nid"),
             col("ce"), col("cenrm"))
-        val hits = probes.join(served, Seq("cell"))
-          .filter(col("qid") =!= col("nid"))
-          .select(col("qid"), col("nid"),
-            (Similarity.dot(col("qe"), col("ce"))
-              / (col("qnrm") * col("cenrm"))).as("cos_sim"))
-        Windows.topKPerGroupRanked(hits, Seq(col("qid")),
-            Seq(col("cos_sim").desc, col("nid")), 3, "rk")
-          .select(col("qid"), col("rk"), col("nid"))
-          .orderBy(col("qid"), col("rk"))
+        Ivf.search(queries, cents, served, nProbe = 2, k = 3)
       },
       Some(ivfOracleSql())),
 
@@ -1960,9 +1947,7 @@ object QueriesSimilarity {
     // codes compress it, the refinement join touches ~50 floats/query.
     Q("q_sim_ann_pq",
       (s, d) => {
-        import graft.operators.Pq
-        // embeddingsSpread measured + reverted here in r16 (3.02 ->
-        // 3.14 s): see q_sim_ann_ivf
+        // plain scan: see annInputs for the measured spread
         val e = Tables.embeddings(s, d)
         val books = Pq.codebooks(e, "vec_id", "embedding",
           m = 16, dim = 64, k = 16)
@@ -1974,46 +1959,7 @@ object QueriesSimilarity {
         Pq.rerankExact(cands, queries, e, "vec_id", "vec_id",
           "embedding", k = 3)
       },
-      Some(s"""WITH sv AS (
-              |  SELECT vec_id, CAST(j AS INT) AS sub,
-              |    list_transform(
-              |      embedding[CAST(j*4+1 AS INT):CAST(j*4+4 AS INT)],
-              |      x -> CAST(x AS DOUBLE)) AS svec
-              |  FROM embeddings, unnest(range(16)) t(j)),
-              |seeds AS (
-              |  SELECT sub, vec_id AS cid, svec AS cvec
-              |  FROM sv WHERE vec_id < 16),
-              |s0 AS (
-              |  SELECT sv.vec_id, sv.sub, sv.svec, c.cid,
-              |    ${dotSql("sv.svec", "sv.svec")}
-              |      - 2 * ${dotSql("sv.svec", "c.cvec")}
-              |      + ${dotSql("c.cvec", "c.cvec")} AS dd
-              |  FROM sv JOIN seeds c USING (sub)),
-              |a0 AS (
-              |  SELECT vec_id, sub, svec, cid FROM (
-              |    SELECT *, row_number() OVER (
-              |      PARTITION BY vec_id, sub ORDER BY dd, cid) AS rn
-              |    FROM s0) WHERE rn = 1),
-              |dims AS (
-              |  SELECT sub, cid, CAST(i AS INT) AS i,
-              |    round_even(avg(svec[CAST(i AS INT)]) * 1000000.0, 0)
-              |      / 1000000.0 AS cv
-              |  FROM a0, unnest(range(1, 5)) t(i)
-              |  GROUP BY sub, cid, i),
-              |books AS (
-              |  SELECT sub, cid, list(cv ORDER BY i) AS cvec
-              |  FROM dims GROUP BY sub, cid),
-              |enc0 AS (
-              |  SELECT sv.vec_id, sv.sub, b.cid,
-              |    ${dotSql("sv.svec", "sv.svec")}
-              |      - 2 * ${dotSql("sv.svec", "b.cvec")}
-              |      + ${dotSql("b.cvec", "b.cvec")} AS dd
-              |  FROM sv JOIN books b USING (sub)),
-              |codes AS (
-              |  SELECT vec_id, sub, cid AS code FROM (
-              |    SELECT *, row_number() OVER (
-              |      PARTITION BY vec_id, sub ORDER BY dd, cid) AS rn
-              |    FROM enc0) WHERE rn = 1),
+      Some(s"""WITH ${pqCodebookCtes("TRUE")},
               |qsub AS (
               |  SELECT vec_id AS qid, sub, svec FROM sv
               |  WHERE vec_id >= 10 AND vec_id < 20),
@@ -2057,26 +2003,13 @@ object QueriesSimilarity {
     // composition claim in the scaladocs is hash-checked, not asserted.
     Q("q_sim_ann_ivfpq",
       (s, d) => {
-        import graft.operators.{Ivf, Pq}
-        // embeddingsSpread was MEASURED here in r16 and reverted: these
-        // multi-consumer index pipelines (separate write jobs between
-        // consumers) re-execute the spread exchange per job — exchange
-        // reuse does not span jobs — so it regressed the whole ANN
-        // family (ivf 0.82 -> 1.81 s, ivf_lake 1.65 -> 4.32,
-        // ivf_incremental 1.90 -> 5.00, ivfpq 3.07 -> 4.68,
-        // ivfpq_incremental 5.86 -> 8.35, semdedup 1.26 -> 1.81 at
-        // sf0.1/32c)
-        val e = Tables.embeddings(s, d)
-          .withColumn("nrm", Similarity.norm(col("embedding")))
+        val (e, queries) = annInputs(s, d)
         val cents = Ivf.lloydCentroids(e, nSeeds = 8)
         val assigned = Ivf.assign(e, cents)
         val books = Pq.codebooks(e, "vec_id", "embedding",
           m = 16, dim = 64, k = 16)
         val codes = Pq.encode(e, "vec_id", "embedding", books,
           m = 16, dim = 64)
-        val queries = e.filter(col("vec_id") >= 10 && col("vec_id") < 20)
-          .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-            col("nrm").as("qnrm"))
         Pq.searchIvfPq(queries, cents, assigned, books, codes,
           m = 16, dim = 64, nProbe = 2, candN = 20, k = 3)
       },
@@ -2097,17 +2030,7 @@ object QueriesSimilarity {
     // the q_text_bm25_incremental convention, now for ANN.
     Q("q_sim_ann_ivf_incremental",
       (s, d) => {
-        import graft.operators.Ivf
-        // embeddingsSpread was MEASURED here in r16 and reverted: these
-        // multi-consumer index pipelines (separate write jobs between
-        // consumers) re-execute the spread exchange per job — exchange
-        // reuse does not span jobs — so it regressed the whole ANN
-        // family (ivf 0.82 -> 1.81 s, ivf_lake 1.65 -> 4.32,
-        // ivf_incremental 1.90 -> 5.00, ivfpq 3.07 -> 4.68,
-        // ivfpq_incremental 5.86 -> 8.35, semdedup 1.26 -> 1.81 at
-        // sf0.1/32c)
-        val e = Tables.embeddings(s, d)
-          .withColumn("nrm", Similarity.norm(col("embedding")))
+        val (e, queries) = annInputs(s, d)
         val base = e.filter(col("vec_id") < 250)
         val batch = e.filter(col("vec_id") >= 250)
         val cents = Ivf.lloydCentroids(base, nSeeds = 8)
@@ -2119,9 +2042,6 @@ object QueriesSimilarity {
         val merged = s.read.parquet(dir)
           .select(col("cell").cast("long").as("cell"), col("nid"),
             col("ce"), col("cenrm"))
-        val queries = e.filter(col("vec_id") >= 10 && col("vec_id") < 20)
-          .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-            col("nrm").as("qnrm"))
         Ivf.search(queries, cents, merged, nProbe = 2, k = 3)
       },
       Some(ivfOracleSql("vec_id < 250"))),
@@ -2135,17 +2055,7 @@ object QueriesSimilarity {
     // oracle replays the rebuild with both trainings base-restricted.
     Q("q_sim_ann_ivfpq_incremental",
       (s, d) => {
-        import graft.operators.{Ivf, Pq}
-        // embeddingsSpread was MEASURED here in r16 and reverted: these
-        // multi-consumer index pipelines (separate write jobs between
-        // consumers) re-execute the spread exchange per job — exchange
-        // reuse does not span jobs — so it regressed the whole ANN
-        // family (ivf 0.82 -> 1.81 s, ivf_lake 1.65 -> 4.32,
-        // ivf_incremental 1.90 -> 5.00, ivfpq 3.07 -> 4.68,
-        // ivfpq_incremental 5.86 -> 8.35, semdedup 1.26 -> 1.81 at
-        // sf0.1/32c)
-        val e = Tables.embeddings(s, d)
-          .withColumn("nrm", Similarity.norm(col("embedding")))
+        val (e, queries) = annInputs(s, d)
         val base = e.filter(col("vec_id") < 250)
         val batch = e.filter(col("vec_id") >= 250)
         val cents = Ivf.lloydCentroids(base, nSeeds = 8)
@@ -2164,9 +2074,6 @@ object QueriesSimilarity {
           .select(col("cell").cast("long").as("cell"), col("nid"),
             col("ce"), col("cenrm"))
         val codes = s.read.parquet(s"$root/codes")
-        val queries = e.filter(col("vec_id") >= 10 && col("vec_id") < 20)
-          .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-            col("nrm").as("qnrm"))
         Pq.searchIvfPq(queries, cents, assigned, books, codes,
           m = 16, dim = 64, nProbe = 2, candN = 20, k = 3)
       },
@@ -2220,9 +2127,7 @@ object QueriesSimilarity {
            |      PARTITION BY md5(text) ORDER BY doc_id) AS rn
            |    FROM documents) WHERE rn = 1),
            |tok AS (
-           |  SELECT doc_id, unnest(string_split(
-           |    trim(regexp_replace(regexp_replace(lower(text),
-           |      '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')), ' ')) AS token
+           |  SELECT doc_id, unnest(${TextFns.tokensSql("text")}) AS token
            |  FROM uniq),
            |hh AS (SELECT doc_id, ${HashFns.md5LongSql("token")} AS h FROM tok),
            |votes AS (
@@ -2339,9 +2244,9 @@ object QueriesSimilarity {
     // set-Jaccard for the candidates only.
     Q("q_sim_ngram_jaccard",
       (s, d) => {
-        // documentsSpread: parallelizes the md5-digest dedup window's
+        // Tables.spread: parallelizes the md5-digest dedup window's
         // map side and the tokenize leg (measured 5.36 -> 4.17 s)
-        val docs = Tables.documentsSpread(s, d)
+        val docs = Tables.spread(s, d, "documents")
         // spreadById (r16, Finding 3): the dedup window re-partitions
         // by content digest, so without this the (doc_id, ngram)
         // distinct re-shuffles the EXPLODED ngram strings; spread the
@@ -2380,9 +2285,7 @@ object QueriesSimilarity {
              |      PARTITION BY md5(text) ORDER BY doc_id) AS rn
              |    FROM documents) WHERE rn = 1),
              |t AS (
-             |  SELECT doc_id, string_split(
-             |    trim(regexp_replace(regexp_replace(lower(text),
-             |      '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')), ' ') AS toks
+             |  SELECT doc_id, ${TextFns.tokensSql("text")} AS toks
              |  FROM uniq),
              |ng AS (
              |  SELECT DISTINCT doc_id,
@@ -2436,36 +2339,8 @@ object QueriesSimilarity {
     Q("q_sim_semdedup",
       (s, d) => {
         val k = Similarity.adaptiveSeedCount(Tables.embeddings(s, d).count())
-        // embeddingsSpread was MEASURED here in r16 and reverted: these
-        // multi-consumer index pipelines (separate write jobs between
-        // consumers) re-execute the spread exchange per job — exchange
-        // reuse does not span jobs — so it regressed the whole ANN
-        // family (ivf 0.82 -> 1.81 s, ivf_lake 1.65 -> 4.32,
-        // ivf_incremental 1.90 -> 5.00, ivfpq 3.07 -> 4.68,
-        // ivfpq_incremental 5.86 -> 8.35, semdedup 1.26 -> 1.81 at
-        // sf0.1/32c)
-        val e = Tables.embeddings(s, d)
-          .withColumn("nrm", Similarity.norm(col("embedding")))
-        val seeds = e.filter(col("vec_id") < k)
-          .select(col("vec_id").as("cid"), col("embedding").as("cvec"),
-            col("nrm").as("cnrm"))
-        val s0 = e.crossJoin(broadcast(seeds))
-          .select(col("vec_id"), col("embedding"), col("cid"),
-            (Similarity.dot(col("embedding"), col("cvec"))
-              / (col("nrm") * col("cnrm"))).as("csim"))
-        val a0 = Dedup.keepFirst(s0, Seq("vec_id"),
-          Seq(col("csim").desc, col("cid")))
-        val cents = a0
-          .select(col("cid"), posexplode(col("embedding")).as(Seq("pos", "v")))
-          .groupBy(col("cid"), col("pos"))
-          .agg((bround(avg(col("v").cast("double")) * lit(1e6)) / lit(1e6))
-            .as("cv"))
-          .groupBy(col("cid"))
-          .agg(transform(
-            array_sort(collect_list(struct(col("pos"), col("cv")))),
-            x => x.getField("cv")).as("cvec"))
-          .select(col("cid"), col("cvec"),
-            Similarity.norm(col("cvec")).as("cnrm"))
+        val (e, _) = annInputs(s, d)
+        val cents = Ivf.lloydCentroids(e, nSeeds = k)
         val scored = e.crossJoin(broadcast(cents))
           .select(col("vec_id"), col("embedding"), col("nrm"), col("cid"),
             (Similarity.dot(col("embedding"), col("cvec"))
@@ -2494,41 +2369,7 @@ object QueriesSimilarity {
             col("__dropped").isNull.cast("int").cast("long").as("is_kept"))
           .orderBy(col("vec_id"))
       },
-      Some(s"""WITH e AS (
-              |  SELECT vec_id, embedding,
-              |         ${normSql("embedding")} AS nrm
-              |  FROM embeddings),
-              |seeds AS (
-              |  SELECT vec_id AS cid, embedding AS cvec, nrm AS cnrm
-              |  FROM e WHERE vec_id < (
-              |    SELECT greatest(8, CAST(ceil(sqrt(count(*))) AS BIGINT))
-              |    FROM embeddings)),
-              |s0 AS (
-              |  SELECT e.vec_id, e.embedding, c.cid,
-              |    ${dotSql("e.embedding", "c.cvec")} / (e.nrm * c.cnrm)
-              |      AS csim
-              |  FROM e, seeds c),
-              |a0 AS (
-              |  SELECT vec_id, embedding, cid
-              |  FROM (SELECT *, row_number() OVER (
-              |          PARTITION BY vec_id ORDER BY csim DESC, cid) AS rn
-              |        FROM s0) WHERE rn = 1),
-              |dims AS (
-              |  SELECT cid, CAST(i AS INT) AS i,
-              |    round_even(avg(CAST(embedding[CAST(i AS INT)] AS DOUBLE))
-              |      * 1000000.0, 0) / 1000000.0 AS cv
-              |  FROM a0, unnest(range(1, len(embedding) + 1)) t(i)
-              |  GROUP BY cid, i),
-              |cents0 AS (
-              |  SELECT cid, list(cv ORDER BY i) AS cvec FROM dims
-              |  GROUP BY cid),
-              |cents AS (
-              |  SELECT cid, cvec, ${normSql("cvec")} AS cnrm FROM cents0),
-              |scored AS (
-              |  SELECT e.vec_id, e.embedding, e.nrm, c.cid,
-              |    ${dotSql("e.embedding", "c.cvec")} / (e.nrm * c.cnrm)
-              |      AS csim
-              |  FROM e, cents c),
+      Some(s"""WITH ${ivfCentroidCtes(adaptiveSeedPredSql, "TRUE")},
               |assign AS (
               |  SELECT cid AS cell, vec_id, embedding, nrm, csim
               |  FROM (SELECT *, row_number() OVER (
@@ -2714,25 +2555,21 @@ object QueriesSimilarity {
     // ratio — bit-identical across engines, no stabilization.
     Q("q_sim_setjoin_prefix",
       (s, d) => {
-        // documentsSpread: tokenize + 3-gram explode + md5 parallelize
+        // Tables.spread: tokenize + 3-gram explode + md5 parallelize
         // and the jaccardSelfJoin's first distinct reuses the spread's
         // doc_id partitioning (measured 3.98 -> 2.12 s)
-        val toked = Tables.documentsSpread(s, d).select(col("doc_id"),
+        val toked = Tables.spread(s, d, "documents").select(col("doc_id"),
           TextFns.tokens(col("text")).as("toks"))
         // 8-byte digests up front: prefix ranking, candidate join AND
         // verify all shuffle longs, never shingle strings (the oracle
         // mirrors the hash, q_sim_ngram_jaccard's convention)
-        val hashed = Similarity.hashedShingles(
-          Similarity.wordNgrams(toked, "doc_id", "toks", 3)
-            .withColumnRenamed("ngram", "shingle"), "doc_id")
+        val hashed = hashedTrigrams(toked)
         graft.operators.SetJoin
           .jaccardSelfJoin(hashed, "doc_id", "h", 0.6)
           .orderBy(col("id_a"), col("id_b"))
       },
       Some(s"""WITH t AS (
-             |  SELECT doc_id, string_split(
-             |    trim(regexp_replace(regexp_replace(lower(text),
-             |      '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')), ' ') AS toks
+             |  SELECT doc_id, ${TextFns.tokensSql("text")} AS toks
              |  FROM documents),
              |ng AS (
              |  SELECT DISTINCT doc_id,
@@ -2769,9 +2606,7 @@ object QueriesSimilarity {
       (s, d) => {
         val toked = Tables.documents(s, d).select(col("doc_id"),
           TextFns.tokens(col("text")).as("toks"))
-        val hashed = Similarity.hashedShingles(
-          Similarity.wordNgrams(toked, "doc_id", "toks", 3)
-            .withColumnRenamed("ngram", "shingle"), "doc_id")
+        val hashed = hashedTrigrams(toked)
         graft.operators.SetJoin
           .containmentSelfJoin(hashed, "doc_id", "h", 0.9)
           .orderBy(col("id_a"), col("id_b"))
@@ -2794,19 +2629,7 @@ object QueriesSimilarity {
     // r=2 bands is ≤ 4e-12 — see the operator's coverage contract
     // for the ρ-envelope this exactness rides on).
     Q("q_sim_containment_indexed",
-      (s, d) => {
-        // spreadById (r16, Finding 3): the ngram explode + md5 leg
-        // parallelizes; containmentBanded's distinct/sizes absorb
-        val toked = Similarity.spreadById(
-          Tables.documents(s, d).select(col("doc_id"),
-            TextFns.tokens(col("text")).as("toks")), "doc_id")
-        val hashed = Similarity.hashedShingles(
-          Similarity.wordNgrams(toked, "doc_id", "toks", 3)
-            .withColumnRenamed("ngram", "shingle"), "doc_id")
-        graft.operators.SetJoin
-          .containmentBanded(hashed, "doc_id", "h", 0.9)
-          .orderBy(col("id_a"), col("id_b"))
-      },
+      (s, d) => containmentIndexed(s, d).orderBy(col("id_a"), col("id_b")),
       Some(containmentExactOracleSql)),
 
     // ------- containment twin with an sf10-REPLAYABLE exact oracle
@@ -2825,19 +2648,9 @@ object QueriesSimilarity {
     // index: the banded probe still runs over the whole corpus, so
     // the plan under test is unchanged.
     Q("q_sim_containment_indexed_sampled",
-      (s, d) => {
-        // spreadById (r16, Finding 3): see q_sim_containment_indexed
-        val toked = Similarity.spreadById(
-          Tables.documents(s, d).select(col("doc_id"),
-            TextFns.tokens(col("text")).as("toks")), "doc_id")
-        val hashed = Similarity.hashedShingles(
-          Similarity.wordNgrams(toked, "doc_id", "toks", 3)
-            .withColumnRenamed("ngram", "shingle"), "doc_id")
-        graft.operators.SetJoin
-          .containmentBanded(hashed, "doc_id", "h", 0.9)
-          .filter(col("id_a") % 97 === 0 || col("id_a") < 50)
-          .orderBy(col("id_a"), col("id_b"))
-      },
+      (s, d) => containmentIndexed(s, d)
+        .filter(col("id_a") % 97 === 0 || col("id_a") < 50)
+        .orderBy(col("id_a"), col("id_b")),
       Some(containmentExactOracleSqlOver(
         "SELECT doc_id, text FROM documents",
         " AND (a.doc_id % 97 = 0 OR a.doc_id < 50)"))),
@@ -2965,16 +2778,12 @@ object QueriesSimilarity {
       (s, d) => {
         val toked = Tables.documents(s, d).select(col("doc_id"),
           TextFns.tokens(col("text")).as("toks"))
-        val hashed = Similarity.hashedShingles(
-          Similarity.wordNgrams(toked, "doc_id", "toks", 3)
-            .withColumnRenamed("ngram", "shingle"), "doc_id")
+        val hashed = hashedTrigrams(toked)
         graft.operators.SetJoin
           .prefixHotElements(hashed, "doc_id", "h", 0.6, maxDf = 2)
       },
       Some(s"""WITH t AS (
-             |  SELECT doc_id, string_split(
-             |    trim(regexp_replace(regexp_replace(lower(text),
-             |      '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')), ' ') AS toks
+             |  SELECT doc_id, ${TextFns.tokensSql("text")} AS toks
              |  FROM documents),
              |ng AS (
              |  SELECT DISTINCT doc_id,
@@ -3133,8 +2942,8 @@ object QueriesSimilarity {
           .orderBy(col("a"), col("b"))
       },
       Some(s"""WITH k AS (
-             |  SELECT doc_id, $textNormSql AS nk,
-             |    list_sort(list_distinct(string_split($textNormSql, ' ')))
+             |  SELECT doc_id, ${TextFns.normalizeSql("text")} AS nk,
+             |    list_sort(list_distinct(${TextFns.tokensSql("text")}))
              |      AS wset
              |  FROM documents),
              |keyed AS (

@@ -63,10 +63,6 @@ object QueriesText {
       |    COALESCE(cur_n, CAST(0 AS BIGINT)) AS cur_n
       |  FROM refb FULL OUTER JOIN curb USING (bin))""".stripMargin
 
-  /** DuckDB mirror of TextFns.normalize. */
-  private val normSql =
-    "trim(regexp_replace(regexp_replace(lower(text),'[^a-z0-9 ]','','g'),' +',' ','g'))"
-
   /** Shared CTE chain of the BM25 oracle (docs 0-4 query docs >= 5):
     * tf/dl/df/avgdl statistics, rational-idf scoring, ordered term
     * folds — ends at `tot(qid, doc_id, score)`. Used verbatim by
@@ -83,7 +79,7 @@ object QueriesText {
     */
   private lazy val bm25CtesSql =
     s"""toks AS (
-       |  SELECT doc_id, unnest(string_split($normSql, ' ')) AS term
+       |  SELECT doc_id, unnest(${TextFns.tokensSql("text")}) AS term
        |  FROM documents),
        |corpus AS (SELECT doc_id, term FROM toks WHERE doc_id >= 5),
        |tf AS (SELECT doc_id, term, count(*) AS tf
@@ -132,7 +128,7 @@ object QueriesText {
           .orderBy(col("doc_id"))
       },
       Some(s"""WITH t AS (
-              |  SELECT doc_id, text, string_split($normSql, ' ') AS toks
+              |  SELECT doc_id, text, ${TextFns.tokensSql("text")} AS toks
               |  FROM documents)
               |SELECT doc_id,
               |  CAST(len(toks) AS BIGINT) AS n_tokens,
@@ -160,7 +156,7 @@ object QueriesText {
           .orderBy(col("doc_id"))
       },
       Some(s"""WITH t AS (
-              |  SELECT doc_id, string_split($normSql, ' ') AS toks
+              |  SELECT doc_id, ${TextFns.tokensSql("text")} AS toks
               |  FROM documents),
               |c AS (
               |  SELECT doc_id,
@@ -205,7 +201,7 @@ object QueriesText {
           .orderBy(col("doc_id"))
       },
       Some(s"""WITH t AS (
-              |  SELECT doc_id, unnest(string_split($normSql, ' ')) AS tok
+              |  SELECT doc_id, unnest(${TextFns.tokensSql("text")}) AS tok
               |  FROM documents),
               |c AS (
               |  SELECT doc_id, tok, count(*) AS c FROM t GROUP BY 1, 2),
@@ -268,7 +264,7 @@ object QueriesText {
           .orderBy(col("doc_id"))
       },
       Some(s"""WITH t AS (
-              |  SELECT doc_id, string_split($normSql, ' ') AS toks
+              |  SELECT doc_id, ${TextFns.tokensSql("text")} AS toks
               |  FROM documents),
               |sc AS (
               |  SELECT doc_id,
@@ -319,7 +315,7 @@ object QueriesText {
           .orderBy(col("doc_id"))
       },
       Some(s"""WITH t AS (
-              |  SELECT doc_id, string_split($normSql, ' ') AS toks
+              |  SELECT doc_id, ${TextFns.tokensSql("text")} AS toks
               |  FROM documents),
               |sc AS (
               |  SELECT doc_id,
@@ -349,7 +345,7 @@ object QueriesText {
           .orderBy(col("doc_id"))
       },
       Some(s"""WITH t AS (
-              |  SELECT doc_id, lang, string_split($normSql, ' ') AS toks
+              |  SELECT doc_id, lang, ${TextFns.tokensSql("text")} AS toks
               |  FROM documents),
               |sc AS (
               |  SELECT doc_id, lang,
@@ -379,7 +375,7 @@ object QueriesText {
           .limit(20)
       },
       Some(s"""WITH t AS (
-              |  SELECT string_split($normSql, ' ') AS toks FROM documents),
+              |  SELECT ${TextFns.tokensSql("text")} AS toks FROM documents),
               |bg AS (
               |  SELECT unnest(list_transform(range(1, len(toks)),
               |    i -> toks[i] || ' ' || toks[i+1])) AS bigram
@@ -445,7 +441,7 @@ object QueriesText {
           .orderBy(col("doc_id"), col("chunk_no"))
       },
       Some(s"""WITH t AS (
-              |  SELECT doc_id, string_split($normSql, ' ') AS toks
+              |  SELECT doc_id, ${TextFns.tokensSql("text")} AS toks
               |  FROM documents),
               |n AS (
               |  SELECT doc_id, toks,
@@ -490,7 +486,7 @@ object QueriesText {
           .orderBy(col("doc_id"), col("score").desc, col("term"))
       },
       Some(s"""WITH toks AS (
-              |  SELECT doc_id, unnest(string_split($normSql, ' ')) AS term
+              |  SELECT doc_id, unnest(${TextFns.tokensSql("text")}) AS term
               |  FROM documents),
               |tf AS (SELECT doc_id, term, count(*) AS tf
               |       FROM toks GROUP BY doc_id, term),
@@ -551,7 +547,7 @@ object QueriesText {
       (s, d) => {
         import graft.operators.Bm25
         import graft.sources.Lake
-        // documentsSpread measured + reverted here in r16 (flat,
+        // Tables.spread measured + reverted here in r16 (flat,
         // 3.89 -> 3.79 s): the bucketed index writes re-execute the
         // exchange per write job, cancelling the scan parallelism
         val toks = Tables.documents(s, d).select(col("doc_id"),
@@ -812,11 +808,12 @@ object QueriesText {
           .orderBy(col("doc_id"))
       },
       Some {
-        val normNoisy = normSql.replace("lower(text)",
-          "lower(upper(substr(text,1,10)) || substr(text,11) || '  !!!')")
+        val norm = TextFns.normalizeSql("text")
+        val normNoisy = TextFns.normalizeSql(
+          "upper(substr(text,1,10)) || substr(text,11) || '  !!!'")
         s"""SELECT doc_id,
-           |  ${HashFns.md5LongSql(normSql)} AS fp,
-           |  CAST(CASE WHEN ${HashFns.md5LongSql(normSql)} =
+           |  ${HashFns.md5LongSql(norm)} AS fp,
+           |  CAST(CASE WHEN ${HashFns.md5LongSql(norm)} =
            |       ${HashFns.md5LongSql(normNoisy)}
            |       THEN 1 ELSE 0 END AS BIGINT) AS noise_invariant
            |FROM documents ORDER BY doc_id""".stripMargin
@@ -896,7 +893,7 @@ object QueriesText {
           .orderBy(col("doc_id"))
       },
       Some(s"""WITH t AS (
-              |  SELECT doc_id, string_split($normSql, ' ') AS toks
+              |  SELECT doc_id, ${TextFns.tokensSql("text")} AS toks
               |  FROM documents),
               |sc AS (
               |  SELECT doc_id,
@@ -919,17 +916,17 @@ object QueriesText {
     // boundaries are pinned token-exactly, not just counted.
     Q("q_text_span_dedup",
       (s, d) => {
-        // documentsSpread: tokenize + 8-gram window fingerprints were
+        // Tables.spread: tokenize + 8-gram window fingerprints were
         // scan-bound on one task (measured 3.69 -> 2.66 s); the
         // per-doc windows reuse the spread's doc_id partitioning
-        val docs = Tables.documentsSpread(s, d).select(col("doc_id"),
+        val docs = Tables.spread(s, d, "documents").select(col("doc_id"),
           TextFns.tokens(col("text")).as("toks"))
         graft.operators.SpanDedup
           .dedupFingerprints(docs, "doc_id", "toks", 8)
           .orderBy(col("doc_id"))
       },
       Some(s"""WITH t AS (
-              |  SELECT doc_id, string_split($normSql, ' ') AS toks
+              |  SELECT doc_id, ${TextFns.tokensSql("text")} AS toks
               |  FROM documents),
               |tok AS (
               |  SELECT doc_id, CAST(u.i - 1 AS BIGINT) AS pos,
@@ -972,9 +969,9 @@ object QueriesText {
     // an exact int/int ratio, so no stabilizer.
     Q("q_text_span_dup_by_source",
       (s, d) => {
-        // documentsSpread: same scan-bound coverage pass as
+        // Tables.spread: same scan-bound coverage pass as
         // q_text_span_dedup (measured 3.71 -> 2.27 s)
-        val docs = Tables.documentsSpread(s, d).select(col("doc_id"),
+        val docs = Tables.spread(s, d, "documents").select(col("doc_id"),
           col("source"), TextFns.tokens(col("text")).as("toks"))
         graft.operators.SpanDedup
           .coverage(docs.select(col("doc_id"), col("toks")),
@@ -989,7 +986,7 @@ object QueriesText {
           .orderBy(col("source"))
       },
       Some(s"""WITH t AS (
-              |  SELECT doc_id, source, string_split($normSql, ' ') AS toks
+              |  SELECT doc_id, source, ${TextFns.tokensSql("text")} AS toks
               |  FROM documents),
               |tok AS (
               |  SELECT doc_id, CAST(u.i - 1 AS BIGINT) AS pos,
@@ -1133,10 +1130,8 @@ object QueriesText {
               .cast("int").cast("long").as("is_repetitive"))
           .orderBy(col("doc_id"))
       },
-      Some("""WITH t AS (
-             |  SELECT doc_id, string_split(
-             |    trim(regexp_replace(regexp_replace(lower(text),
-             |      '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')), ' ') AS toks
+      Some(s"""WITH t AS (
+             |  SELECT doc_id, ${TextFns.tokensSql("text")} AS toks
              |  FROM documents),
              |ng AS (
              |  SELECT doc_id,
@@ -1242,7 +1237,7 @@ object QueriesText {
           .orderBy(col("doc_id"))
       },
       Some(s"""WITH t AS (
-              |  SELECT doc_id, unnest(string_split($normSql, ' ')) AS tok
+              |  SELECT doc_id, unnest(${TextFns.tokensSql("text")}) AS tok
               |  FROM documents),
               |v AS (SELECT tok, count(*) AS c FROM t GROUP BY 1),
               |n AS (SELECT sum(c) AS total FROM v),
@@ -1295,7 +1290,7 @@ object QueriesText {
       },
       Some(s"""WITH t AS (
               |  SELECT doc_id, lang,
-              |    unnest(string_split($normSql, ' ')) AS tok
+              |    unnest(${TextFns.tokensSql("text")}) AS tok
               |  FROM documents),
               |v AS (
               |  SELECT tok, count(*) AS c_raw,
@@ -1586,7 +1581,7 @@ object QueriesText {
           .orderBy(col("doc_id"))
       },
       Some(s"""WITH t AS (
-              |  SELECT doc_id, string_split($normSql, ' ') AS toks
+              |  SELECT doc_id, ${TextFns.tokensSql("text")} AS toks
               |  FROM documents),
               |big AS (
               |  SELECT doc_id, toks[CAST(u.i AS INT)] AS w1,
@@ -1853,7 +1848,7 @@ object QueriesText {
              |      ELSE list_concat(acc, t) END) AS toks
              |  FROM $src, $b)""".stripMargin
         s"""WITH t0 AS (
-           |  SELECT string_split($normSql, ' ') AS toks FROM documents),
+           |  SELECT ${TextFns.tokensSql("text")} AS toks FROM documents),
            |${round("t0", "b1", "p1")},
            |${apply("t0", "b1", "t1")},
            |${round("t1", "b2", "p2")},
@@ -1877,12 +1872,12 @@ object QueriesText {
     // training AND encoding with the same list_reduce fold.
     Q("q_text_bpe_encode",
       (s, d) => {
-        // documentsSpread: the encode fold (3 nested greedy merges per
+        // Tables.spread: the encode fold (3 nested greedy merges per
         // doc) is map-only and was serialized by the single-file scan
         // (measured 5.46 -> 1.88 s; q_text_bpe_merges deliberately
         // stays unspread — its 3 tiny training rounds REGRESSED 0.47
         // -> 1.19 s under the same spread, see OPTIMIZATION_r15.md)
-        val docsT = Tables.documentsSpread(s, d).select(col("doc_id"),
+        val docsT = Tables.spread(s, d, "documents").select(col("doc_id"),
           TextFns.tokens(col("text")).as("toks"))
         val rules = graft.operators.Bpe.trainMerges(
             docsT.select(col("toks")), "toks", iters = 3)
@@ -1920,7 +1915,7 @@ object QueriesText {
              |  FROM $src, $b)""".stripMargin
         }
         s"""WITH t0d AS (
-           |  SELECT doc_id, string_split($normSql, ' ') AS toks
+           |  SELECT doc_id, ${TextFns.tokensSql("text")} AS toks
            |  FROM documents),
            |t0 AS (SELECT toks FROM t0d),
            |${round("t0", "b1", "p1")},
@@ -2034,7 +2029,7 @@ object QueriesText {
       Some {
         import graft.operators.Features
         s"""WITH t AS (
-           |  SELECT doc_id, unnest(string_split($normSql, ' ')) AS tok
+           |  SELECT doc_id, unnest(${TextFns.tokensSql("text")}) AS tok
            |  FROM documents),
            |f AS (
            |  SELECT doc_id, ${Features.bucketSql("tok", 64)} AS bucket,
@@ -2069,7 +2064,7 @@ object QueriesText {
           .orderBy(col("doc_id"))
       },
       Some(s"""WITH t AS (
-              |  SELECT doc_id, unnest(string_split($normSql, ' ')) AS tok
+              |  SELECT doc_id, unnest(${TextFns.tokensSql("text")}) AS tok
               |  FROM documents),
               |ty AS (
               |  SELECT doc_id, CAST(count(DISTINCT tok) AS BIGINT)
@@ -2116,7 +2111,7 @@ object QueriesText {
           .orderBy(col("doc_id"))
       },
       Some(s"""WITH t AS (
-              |  SELECT doc_id, unnest(string_split($normSql, ' ')) AS tok
+              |  SELECT doc_id, unnest(${TextFns.tokensSql("text")}) AS tok
               |  FROM documents),
               |c AS (SELECT doc_id, tok, count(*) AS c
               |      FROM t GROUP BY 1, 2),
@@ -2161,7 +2156,7 @@ object QueriesText {
       Some {
         def st(e: String) = graft.functions.Stabilize.stabSql(e, 6)
         s"""WITH t AS (
-           |  SELECT unnest(string_split($normSql, ' ')) AS tok
+           |  SELECT unnest(${TextFns.tokensSql("text")}) AS tok
            |  FROM documents),
            |v AS (SELECT tok, count(*) AS c FROM t GROUP BY 1),
            |r AS (
@@ -2230,7 +2225,7 @@ object QueriesText {
       Some {
         def st(e: String) = graft.functions.Stabilize.stabSql(e, 6)
         s"""WITH t AS (
-           |  SELECT doc_id, unnest(string_split($normSql, ' ')) AS tok
+           |  SELECT doc_id, unnest(${TextFns.tokensSql("text")}) AS tok
            |  FROM documents),
            |nt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n
            |       FROM t GROUP BY 1),
@@ -2315,7 +2310,7 @@ object QueriesText {
               |      PARTITION BY md5(text) ORDER BY doc_id) AS rn
               |    FROM en) WHERE rn = 1),
               |t AS (
-              |  SELECT doc_id, string_split($normSql, ' ') AS toks
+              |  SELECT doc_id, ${TextFns.tokensSql("text")} AS toks
               |  FROM uniq),
               |ng AS (
               |  SELECT DISTINCT doc_id,
@@ -2373,7 +2368,7 @@ object QueriesText {
           .orderBy(col("doc_id"))
       },
       Some(s"""WITH t AS (
-              |  SELECT doc_id, string_split($normSql, ' ') AS toks
+              |  SELECT doc_id, ${TextFns.tokensSql("text")} AS toks
               |  FROM documents),
               |ng AS (
               |  SELECT DISTINCT doc_id,
@@ -2433,7 +2428,7 @@ object QueriesText {
           .orderBy(col("pmi").desc, col("w1"), col("w2"))
       },
       Some(s"""WITH t AS (
-              |  SELECT string_split($normSql, ' ') AS toks FROM documents),
+              |  SELECT ${TextFns.tokensSql("text")} AS toks FROM documents),
               |bg AS (
               |  SELECT unnest(list_transform(range(1, len(toks)),
               |    i -> toks[i] || ' ' || toks[i+1])) AS bigram
@@ -2444,7 +2439,7 @@ object QueriesText {
               |         count(*) AS c_xy
               |  FROM bg GROUP BY 1, 2 HAVING count(*) >= 5),
               |u AS (
-              |  SELECT unnest(string_split($normSql, ' ')) AS w
+              |  SELECT unnest(${TextFns.tokensSql("text")}) AS w
               |  FROM documents),
               |uc AS (SELECT w, count(*) AS c FROM u GROUP BY 1),
               |tt AS (SELECT CAST(sum(c) AS DOUBLE) AS T FROM uc),
@@ -2544,7 +2539,7 @@ object QueriesText {
     */
   private def sourceOverlapSqlOver(src: String): String =
     s"""t AS (
-              |  SELECT doc_id, string_split($normSql, ' ') AS toks
+              |  SELECT doc_id, ${TextFns.tokensSql("text")} AS toks
               |  FROM $src),
               |ng AS (
               |  SELECT DISTINCT doc_id,
@@ -2571,9 +2566,7 @@ object QueriesText {
     */
   private def contaminationSqlOver(src: String): String =
     s"""t AS (
-             |  SELECT doc_id, string_split(
-             |    trim(regexp_replace(regexp_replace(lower(text),
-             |      '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')), ' ') AS toks
+             |  SELECT doc_id, ${TextFns.tokensSql("text")} AS toks
              |  FROM $src),
              |ng AS (
              |  SELECT DISTINCT doc_id,

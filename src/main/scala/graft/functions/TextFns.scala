@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * documents table and Catalyst can prune/push around them.
   *
   * Every function has an exact DuckDB mirror used by the oracle queries —
-  * see QueriesText for the side-by-side SQL.
+  * `normalizeSql`/`tokensSql` here, the rest inline in QueriesText.
   */
 object TextFns {
 
@@ -21,8 +21,19 @@ object TextFns {
   def normalize(c: Column): Column =
     trim(regexp_replace(regexp_replace(lower(c), "[^a-z0-9 ]", ""), " +", " "))
 
+  /** DuckDB mirror of [[normalize]] over the SQL expression `expr`
+    * (the HashFns.md5LongSql convention: the oracle SQL is built from
+    * the same definition site as the Spark column).
+    */
+  def normalizeSql(expr: String): String =
+    s"trim(regexp_replace(regexp_replace(lower($expr),'[^a-z0-9 ]','','g'),' +',' ','g'))"
+
   /** Whitespace tokens (single-space split of normalized text). */
   def tokens(c: Column): Column = split(normalize(c), " ")
+
+  /** DuckDB mirror of [[tokens]]. */
+  def tokensSql(expr: String): String =
+    s"string_split(${normalizeSql(expr)}, ' ')"
 
   /** Count of tokens matching the set (e.g. stopwords). */
   def countIn(toks: Column, set: Seq[String]): Column =

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Inverted-file (IVF) ANN index as three composable stages, factored
@@ -104,18 +103,23 @@ object Ivf {
   def cellCounts(assigned: DataFrame): DataFrame =
     assigned.groupBy(col("cell")).agg(count(lit(1)).as("n"))
 
-  /** Probe each query's `nProbe` nearest cells, score ONLY those cells'
-    * members, keep top `k` → (qid, rk, nid).
+  /** Each query's `nProbe` nearest cells by centroid cosine, ties to
+    * the lowest cell → (qid, qe, qnrm, cell, psim).
     */
-  def search(queries: DataFrame, cents: DataFrame, assigned: DataFrame,
-             nProbe: Int, k: Int): DataFrame = {
-    val probes = Windows.topKPerGroup(
+  def probe(queries: DataFrame, cents: DataFrame, nProbe: Int): DataFrame =
+    Windows.topKPerGroup(
       queries.crossJoin(broadcast(cents))
         .select(col("qid"), col("qe"), col("qnrm"), col("cid").as("cell"),
           (Similarity.dot(col("qe"), col("cvec"))
             / (col("qnrm") * col("cnrm"))).as("psim")),
       Seq(col("qid")), Seq(col("psim").desc, col("cell")), nProbe)
-    val hits = probes.join(assigned, Seq("cell"))
+
+  /** Probe each query's `nProbe` nearest cells, score ONLY those cells'
+    * members, keep top `k` → (qid, rk, nid).
+    */
+  def search(queries: DataFrame, cents: DataFrame, assigned: DataFrame,
+             nProbe: Int, k: Int): DataFrame = {
+    val hits = probe(queries, cents, nProbe).join(assigned, Seq("cell"))
       .filter(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"),
         (Similarity.dot(col("qe"), col("ce"))

@@ -137,14 +137,9 @@ object Pq {
   def searchIvfPq(queries: DataFrame, cents: DataFrame, assigned: DataFrame,
                   books: DataFrame, codes: DataFrame, m: Int, dim: Int,
                   nProbe: Int, candN: Int, k: Int): DataFrame = {
-    val probes = Windows.topKPerGroup(
-      queries.crossJoin(broadcast(cents))
-        .select(col("qid"), col("qe"), col("qnrm"), col("cid").as("cell"),
-          (Similarity.dot(col("qe"), col("cvec"))
-            / (col("qnrm") * col("cnrm"))).as("psim")),
-      Seq(col("qid")), Seq(col("psim").desc, col("cell")), nProbe)
+    val members = Ivf.probe(queries, cents, nProbe)
       .select(col("qid"), col("cell"))
-    val members = probes.join(assigned, Seq("cell"))
+      .join(assigned, Seq("cell"))
       .filter(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"))
     val qsub = subvectors(queries, "qid", "qe", m, dim)

@@ -137,7 +137,7 @@ object Similarity {
       .distinct()
 
   /** Deterministic fan-out by id across the session's planned shuffle
-    * width — the post-dedup sibling of Tables.*Spread (r15): the
+    * width — the post-dedup sibling of Tables.spread (r15): the
     * exact-dedup window leaves the corpus partitioned by content
     * digest, which no downstream shingle consumer can use, so the
     * shingle pipelines re-shuffled the EXPLODED (id, h) frame for

@@ -62,33 +62,16 @@ object Tables {
     * exchange defeats subtree reuse in its 4-consumer uncached scan
     * pipeline; q_text_bpe_merges 0.47→1.19 s: 3 tiny training rounds
     * pay the exchange + task fan-out each). So the base loaders stay
-    * plain scans and the measured winners call the *Spread variants.
+    * plain scans and the measured winners call [[spread]].
     */
-  def documentsSpread(s: SparkSession, d: String): DataFrame =
-    spread(s, d, "documents", "doc_id")
-  def ordersSpread(s: SparkSession, d: String): DataFrame =
-    spread(s, d, "orders", "o_orderkey")
-  def embeddingsSpread(s: SparkSession, d: String): DataFrame =
-    spread(s, d, "embeddings", "vec_id")
-  def lineitemSpread(s: SparkSession, d: String): DataFrame =
-    spread(s, d, "lineitem", "l_orderkey")
-  def eventsSpread(s: SparkSession, d: String): DataFrame = {
-    // events needs the ts conversion; the spread gate/fan-out is the
-    // same. Key is event_id (unique -> even hash spread, §2.5).
-    val df = events(s, d)
-    spreadFrame(s, df, s"$d/events.parquet", "event_id")
-  }
-
-  private def spread(s: SparkSession, d: String, name: String,
-                     key: String): DataFrame =
-    spreadFrame(s, load(s, d, name), s"$d/$name.parquet", key)
-
-  private def spreadFrame(s: SparkSession, df: DataFrame, path: String,
-                          key: String): DataFrame = {
+  def spread(s: SparkSession, d: String, table: String): DataFrame = {
+    val key = spreadKey(table)
+    // events needs the ts conversion; the gate and fan-out are the same
+    val df = if (table == "events") events(s, d) else load(s, d, table)
     val cores = s.sparkContext.defaultParallelism
     val maxPB = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       s.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
-    val bytes = pathBytes(path)
+    val bytes = pathBytes(s"$d/$table.parquet")
     // Two gates (r15 ADVICE tightened the second): the cheap byte gate
     // says the input COULD under-parallelize; the planned-scan gate
     // (the scan's actual partition count, row-group/split driven)
@@ -100,6 +83,14 @@ object Tables {
       df.repartition(cores, org.apache.spark.sql.functions.col(key))
     else df
   }
+
+  /** Each spreadable table's primary id — unique, so the hash spread is
+    * even (guide §2.5).
+    */
+  private val spreadKey = Map(
+    "documents" -> "doc_id", "orders" -> "o_orderkey",
+    "embeddings" -> "vec_id", "lineitem" -> "l_orderkey",
+    "events" -> "event_id")
 
   /** events.parquet stores `ts` as parquet TIMESTAMP(NANOS), which Spark
     * only reads via spark.sql.legacy.parquet.nanosAsLong (as a raw long).

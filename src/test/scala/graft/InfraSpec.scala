@@ -169,6 +169,32 @@ class InfraSpec extends AnyFunSuite {
     assert(new java.io.File(out, "q_ok").list().exists(_.endsWith(".parquet")))
   }
 
+  test("Tables.spread hash-spreads a one-partition scan by its key and leaves a wide scan alone") {
+    import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+    def repartitions(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.logical.collect { case r: RepartitionByExpression => r }
+    // one small file scans as one partition under the local[4] session
+    assert(Tables.documents(spark, sf).rdd.getNumPartitions == 1)
+    val spread = Tables.spread(spark, sf, "documents")
+    assert(spread.rdd.getNumPartitions == 4)
+    assert(repartitions(spread).flatMap(_.partitionExpressions)
+      .flatMap(_.references.map(_.name)) == Seq("doc_id"))
+    // every row sits in the Murmur3 hash partition of its doc_id
+    assert(spread.filter(spark_partition_id() =!=
+      pmod(hash(col("doc_id")), lit(4))).isEmpty)
+    assert(spread.count() == Tables.documents(spark, sf).count())
+    // four files already scan as four partitions: the byte gate passes,
+    // the planned-scan gate returns the frame unchanged
+    val dir = Files.createTempDirectory("graft_spread").toString
+    Tables.documents(spark, sf).repartition(4)
+      .write.parquet(s"$dir/documents.parquet")
+    val wide = Tables.documents(spark, dir)
+    assert(wide.rdd.getNumPartitions >= 4)
+    val unchanged = Tables.spread(spark, dir, "documents")
+    assert(repartitions(unchanged).isEmpty)
+    assert(unchanged.rdd.getNumPartitions == wide.rdd.getNumPartitions)
+  }
+
   test("autoWidthFactor sums bytes recursively and gates on 1 GB") {
     // r12 defect: a top-level-only listing returned 0 bytes for
     // partitioned lake dirs (data lives in day=.../part-*.parquet),

@@ -144,6 +144,14 @@ def seed_report(out_json, merge):
     return {}
 
 
+def result_names(oracle, out_dir):
+    """Every oracle key and every output directory, sorted. A key with
+    no output is checked (and FAILs with "no spark output") instead of
+    silently dropping out of the count when its query threw."""
+    return sorted(set(oracle) | {d for d in os.listdir(out_dir)
+                                 if os.path.isdir(os.path.join(out_dir, d))})
+
+
 def main(sf_dir, out_dir, out_json, merge=False):
     # One connection PER QUERY: a DuckDB OutOfMemoryException poisons
     # the connection's buffer pool — at sf10 a single OOM oracle made
@@ -151,8 +159,7 @@ def main(sf_dir, out_dir, out_json, merge=False):
     # bad-allocation errors. Views are cheap to re-create.
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     report = seed_report(out_json, merge)
-    results = sorted(d for d in os.listdir(out_dir)
-                     if os.path.isdir(os.path.join(out_dir, d)))
+    results = result_names(oracle, out_dir)
     n_fail = 0
     for name in results:
         entry = {"rows_match": False, "schema_match": False,
@@ -208,8 +215,8 @@ def main_one(sf_dir, out_dir, out_json, name):
 def main_isolated(sf_dir, out_dir, out_json, merge=False):
     """Driver mode: one subprocess (and one DuckDB process) per query."""
     timeout = int(os.environ.get("DUCK_QUERY_TIMEOUT", "3600"))
-    results = sorted(d for d in os.listdir(out_dir)
-                     if os.path.isdir(os.path.join(out_dir, d)))
+    oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
+    results = result_names(oracle, out_dir)
     report, n_fail = seed_report(out_json, merge), 0
     for name in results:
         shutil.rmtree(os.path.join("target", "duck_tmp"),
