@@ -1,384 +1,145 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
-/** Benchmark main. Materializes every SparkEntry query through the noop
-  * sink (full execution of projections + final sort — `.count()` would let
-  * Catalyst prune most of the work) and emits ONE JSON line on stdout plus
-  * a copy at BENCH_LOCAL.json so the driver can parse it either way.
-  * Failures are surfaced as negative times + an "errors" map, never hidden.
+/** Benchmark main. Runs every selected SparkEntry query through the noop
+  * sink and writes one JSON line to BENCH_LOCAL.json (or
+  * BENCH_LOCAL_PARTIAL.json when a Queries.selected filter is set, so a
+  * targeted run never overwrites the committed full-suite numbers).
   *
-  * Measurement discipline (round-2 verdict: n=1 timings were order- and
-  * GC-sensitive — four sub-3 s queries "regressed" 5-10× with no code
-  * change): each query runs up to SPARK_GRAFT_BENCH_RUNS times (default
-  * 4) and reports the MEDIAN, so one GC pause or JIT warmup can't
-  * masquerade as a plan regression, and the full JSON line carries a
-  * per-query [min, median, max] "spread" map so machine-load
-  * sensitivity is visible in the committed artifact (r3-r5 recorded
-  * 74.6/82.6/108.5 s totals on byte-identical code). Queries whose
-  * FIRST run exceeds
-  * SPARK_GRAFT_BENCH_RERUN_MAX_SEC (default 20 s) are not re-run: noise
-  * is additive (~seconds), so it only distorts fast queries, and
-  * re-running the slow tail would triple total bench wall-clock for
-  * timings that are already high-signal. The JSON line is printed as
-  * the very last stdout write, after SparkSession.stop(), so the
-  * driver's tail capture can't lose it inside executor-shutdown noise.
+  * One measurement rule, applied to every query:
+  *  - The noop sink executes every projection and the final sort;
+  *    `.count()` would let Catalyst prune most of the work.
+  *  - One cold run, then warm runs up to [[Runs]] in total. With 3 or
+  *    more runs the chronological first is dropped and the rest sorted:
+  *    run 1 pays JIT compilation or the previous query's GC debt, a
+  *    different mode measured at ~2.7× the warm cost. "queries" is the
+  *    warm median, "spread" the warm [min, median, max] (the 2× spread
+  *    bar), and the cold run is kept in "first".
+  *  - A first run of [[RerunMaxSec]] or more is not re-run. Noise is
+  *    additive (seconds), so it only distorts fast queries, and
+  *    re-running the slow tail would triple the sweep for timings that
+  *    are already high-signal.
+  *  - When the first run took over 2 s, a full GC precedes each rerun,
+  *    so collection of the previous run's garbage is charged to the gap,
+  *    not to the next measurement (as JMH does).
+  *  - The cache is cleared after each query: queries cache()
+  *    intermediates, and a sweep's worth of never-unpersisted frames
+  *    turned the storage pool into GC pressure that inflated later
+  *    queries 2-3× (r3: q_corpus_clean 23.5 s in-sweep vs 7.0 s alone).
   *
-  * LOAD GUARD (r7 verdict: committed totals carried 2-5× ambient-load
-  * inflation): the artifact records /proc/loadavg at start and end,
-  * and any query whose own min..max spread exceeds the guard ratio
-  * (2× when min > 0.5 s — where spread means load, not timer jitter —
-  * else 3×) is re-measured after the full sweep, up to
-  * SPARK_GRAFT_BENCH_GUARD_PASSES times, keeping the lower median
-  * (load only adds time, so lower ≡ closer to the plan's true cost).
-  * Re-run names are listed under "load_reruns" so the correction is
-  * visible, not silent.
+  * Load is made visible instead of re-measured away: "cpu" is the warm
+  * median of process CPU seconds per run and "gc" the warm median of GC
+  * seconds per run (summed over all collectors). Ambient load shows as
+  * wall time far above CPU time, a neighbour's GC debt as GC seconds.
+  * "loadavg" records the 1-min load at start and end. For a query timed
+  * alone in a fresh JVM, use `tools/run_isolated.sh`.
   *
-  * START GATE (r8/r9 verdicts: sweeps started at loadavg 7+, inflating
-  * 15+ queries past the guard): before the warmup query, the bench
-  * WAITS for 1-min loadavg to drop below SPARK_GRAFT_BENCH_LOAD_GATE
-  * (default 2.0), polling every 15 s up to
-  * SPARK_GRAFT_BENCH_MAX_WAIT_SEC (default 600) — then proceeds
-  * regardless (a bounded wait; a busy driver box should delay the
-  * artifact, not block it forever). The waited seconds are recorded in
-  * the JSON ("load_waited_sec") so a gate that had to give up is
-  * visible.
-  *
-  * ISOLATED RERUNS (r11 verdict: the exact graph trio's multi-GB
-  * allocations leave GC debt that in-context guard reruns keep
-  * re-paying, so 13 queries' committed spreads still exceeded 2×):
-  * after the guard passes, any query still noisy is re-measured in a
-  * FRESH JVM subprocess (same classpath and JVM flags, EXACTLY one
-  * query via SPARK_GRAFT_ONLY + SPARK_GRAFT_ONLY_EXACT) and kept under
-  * the same lower-median / tighter-spread rule; names land in
-  * "isolated_reruns". The known multi-GB exact baselines (graph trio +
-  * label_prop + containment + semdedup) are isolated UNCONDITIONALLY —
-  * three rounds of evidence say no in-context rerun escapes their GC
-  * debt. Capped by SPARK_GRAFT_BENCH_ISOLATE_MAX (default 24);
-  * children never recurse (their filter is set).
-  *
-  * WARM-MODE STATISTICS (round 13): with 3+ runs, the chronological
-  * FIRST run is excluded from the kept set — it measures a different
-  * mode (JIT compilation in a fresh JVM, or the previous query's GC
-  * debt in-sweep; ~2.7× the warm cost, and it WAS the max of nearly
-  * every wide committed spread). The cold number is committed
-  * per-query in the "first" map; "queries"/"spread" are warm-mode.
-  *
-  * Default runs is 4 since round 14 (r13 verdict: with 3 runs the
-  * warm set was n=2, so the committed "median" was the MAX of two
-  * samples and one ambient-load hit on a warm run became the
-  * committed number — q_sim_lsh_neardup committed 8.88 s with warm
-  * min 4.90). 4 runs → 3 warm samples → a true median that one
-  * outlier cannot move.
+  * The full line and then a compact summary (total, the 15 slowest
+  * medians, counts) are the last two stdout writes, after
+  * SparkSession.stop(): a caller that captures only the tail of stdout
+  * still gets a parseable summary (in r2/r3 the full line's head was cut
+  * out of such a capture window).
   */
 object Bench {
+  /** Runs per query: one cold run, then warm runs up to this total. */
+  val Runs = 4
+  /** A query whose first run takes this many seconds is not re-run. */
+  val RerunMaxSec = 20.0
+
+  /** One noop-sink run: wall, process CPU and GC seconds. */
+  private[graft] case class Run(wall: Double, cpu: Double, gc: Double)
+
+  private val osBean = ManagementFactory.getOperatingSystemMXBean
+    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+  private def cpuSec: Double = osBean.getProcessCpuTime / 1e9
+  private def gcSec: Double = ManagementFactory.getGarbageCollectorMXBeans
+    .asScala.map(_.getCollectionTime.max(0L)).sum / 1e3
+  private def loadavg1m: Double =
+    try Files.readString(Paths.get("/proc/loadavg")).trim
+      .split("\\s+")(0).toDouble
+    catch { case _: Throwable => -1.0 }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "4").toInt.max(1)
-    val rerunMaxSec =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_RERUN_MAX_SEC", "20").toDouble
-    val loadGate =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_LOAD_GATE", "2.0").toDouble
-    val maxWaitSec =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_WAIT_SEC", "600").toInt
-    val guardPasses =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_GUARD_PASSES", "2").toInt.max(1)
     val spark = Sessions.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Sessions.quietAuditedWindowWarn() // audited global windows, see Sessions
-    def loadavg1mEarly: Double =
-      try Files.readString(Paths.get("/proc/loadavg")).trim
-        .split("\\s+")(0).toDouble
-      catch { case _: Throwable => -1.0 }
-    // Start gate: wait (bounded) for a quiet machine before measuring.
-    val waitStart = System.nanoTime()
-    var waited = 0L
-    while (loadavg1mEarly >= loadGate &&
-        (System.nanoTime() - waitStart) / 1e9 < maxWaitSec) {
-      System.err.println(
-        f"[bench] loadavg ${loadavg1mEarly}%.2f >= $loadGate%.1f — waiting")
-      Thread.sleep(15000)
-      waited = ((System.nanoTime() - waitStart) / 1e9).toLong
-    }
-    // JVM/codegen warmup so the first measured query isn't charged for
-    // session spin-up (VERDICT r1: first query carried ~8s of warmup).
+    // JVM/codegen warmup, so the first measured query is not charged for
+    // session spin-up (VERDICT r1: ~8 s).
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-
-    // Optional local-iteration filters (same contract as Verify's,
-    // shared in Queries.selected): SPARK_GRAFT_ONLY prefix list,
-    // SPARK_GRAFT_ONLY_EXACT, SPARK_GRAFT_FAMILY. The driver never
-    // sets any of them.
-    val filtered = Queries.filtered
-    var errors = Map.empty[String, String]
-    def loadavg1m: Double =
-      try Files.readString(Paths.get("/proc/loadavg")).trim
-        .split("\\s+")(0).toDouble
-      catch { case _: Throwable => -1.0 }
     val loadStart = loadavg1m
-    val queryFns = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(kv => Queries.selected(kv._1))
-    // name -> the very FIRST measured run in this process (never
-    // overwritten by guard/isolated reruns): the cold-JIT mode, kept
-    // next to the median so sf10 cross-round comparisons can say which
-    // mode they quote (SCALING.md round 12's measurement-trap finding).
-    var firsts = Map.empty[String, Double]
-    def measure(name: String, fn: (SparkSession, String) =>
-        org.apache.spark.sql.DataFrame): Seq[Double] = {
-      def once(): Option[Double] = {
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch {
-          case e: Throwable =>
+    var errors = Map.empty[String, String]
+    val results = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter(kv => Queries.selected(kv._1)).map { case (name, fn) =>
+        def once(): Option[Run] = {
+          val (c0, g0, t0) = (cpuSec, gcSec, System.nanoTime())
+          try {
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            Some(Run((System.nanoTime() - t0) / 1e9, cpuSec - c0, gcSec - g0))
+          } catch { case e: Throwable =>
             errors += name -> e.toString.take(200)
             None
-        }
-      }
-      val first = once()
-      if (!firsts.contains(name))
-        firsts += name -> first.getOrElse(-1.0)
-      val times = first match {
-        case Some(t) if t < rerunMaxSec =>
-          Seq(t) ++ (2 to runs).flatMap { _ =>
-            // Heavy queries (the exact graph trio's 400M-pair
-            // crossJoin baselines) leave multi-GB GC debt that the
-            // NEXT run pays as a 2-4× outlier (r10: pagerank max 9 s
-            // vs 2.6 s median, the worst remaining spreads). A forced
-            // full GC between runs is standard benchmark hygiene
-            // (JMH does the same) — it charges collection to the gap,
-            // not to the following measurement.
-            if (t > 2.0) System.gc()
-            once()
-          }
-        case other => other.toSeq
-      }
-      // Drop THIS query's cached frames before moving on: queries
-      // cache() intermediates (shingle frames are hundreds of MB at
-      // sf0.1), and 98 queries' worth of never-unpersisted cache turns
-      // the storage pool into GC pressure that inflated the similarity
-      // family 2-3× in full-bench runs vs isolated runs (r3:
-      // q_corpus_clean 23.5 s full-bench vs 7.0 s isolated). Clearing
-      // BETWEEN queries keeps intra-query reuse (runs 2..n still hit
-      // this query's cache) while keeping measurements independent.
-      spark.sharedState.cacheManager.clearCache()
-      // WARM-MODE convention (round 13, closing the three-round spread
-      // chase): the CHRONOLOGICAL first run is dropped from the kept
-      // set when 3+ runs exist — run 1 pays JIT compilation (fresh
-      // JVM) or the previous query's GC debt (in-sweep), a DIFFERENT
-      // MODE measured ~2.7× the warm cost (r12's 17.5→8.0→8.4 s
-      // star_revenue run; in this round's artifact max == first for
-      // nearly every wide spread). The cold number is not hidden: it
-      // is committed per-query in the "first" map. "queries"/"spread"
-      // are warm-mode statistics — the repeatability the 2× spread
-      // bar exists to test, and the mode that matters at cluster
-      // scale (JIT warms once per executor lifetime, not per query).
-      (if (times.size >= 3) times.drop(1) else times).sorted
-    }
-    val firstPass = queryFns.map { case (name, fn) => name -> measure(name, fn) }
-    // Load guard (r7 verdict: the committed artifact embedded 2-5×
-    // ambient-load inflation — q_join_star_revenue 7.43 s committed vs
-    // 1.45 s isolated). A query whose own [min..max] spread exceeds 3×
-    // was measured through interference, not through its plan; re-run
-    // it ONCE after the sweep (the machine has usually calmed by then)
-    // and keep whichever set of times has the LOWER median — the lower
-    // median is closer to the noise-free cost, since load only ever
-    // adds time.
-    val loadReruns = scala.collection.mutable.ListBuffer.empty[String]
-    // A query is "noisy" when its own spread says the measurement went
-    // through interference: > 2× for queries over 0.5 s (where spread
-    // means load), > 3× below that (where timer/GC jitter dominates
-    // and a 2× bar would re-run half the suite forever). The 0.5 s
-    // split is on the MEDIAN (the committed number), not the min — a
-    // 0.48/0.52/1.4 spread is a >0.5 s query with a 2.9× spread, and
-    // judging it by its min let it skip the rerun (r11 artifact).
-    def isNoisy(ts: Seq[Double]): Boolean =
-      ts.size >= 2 && ts.head > 0 &&
-        ts.last / ts.head > (if (ts(ts.size / 2) > 0.5) 2.0 else 3.0)
-    def med(s: Seq[Double]) = if (s.isEmpty) Double.MaxValue
-      else s(s.size / 2)
-    val fnByName = queryFns.toMap
-    var results = firstPass
-    var pass = 0
-    while (pass < guardPasses && results.exists(r => isNoisy(r._2))) {
-      results = results.map { case (name, ts) =>
-        if (!isNoisy(ts)) name -> ts
-        else {
-          loadReruns += name
-          // A failed RETRY must not mark a query that already has valid
-          // first-pass times as errored — snapshot the error map and
-          // restore it when the retry is discarded, so the artifact
-          // can't list a query under both "queries" and "errors".
-          val errorsBefore = errors
-          val retry = measure(name, fnByName(name))
-          // Lower median wins (load only adds time). When the medians
-          // agree within 10% the runs saw the same plan cost and the
-          // choice is about the ARTIFACT: keep the tighter spread, so
-          // one GC/load outlier in an otherwise-agreeing pair doesn't
-          // survive into the committed [min, med, max].
-          def ratio(s: Seq[Double]) =
-            if (s.size >= 2 && s.head > 0) s.last / s.head else Double.MaxValue
-          val keepRetry =
-            if (med(retry) < med(ts) * 0.9) true
-            else if (med(ts) < med(retry) * 0.9) false
-            else ratio(retry) <= ratio(ts)
-          if (keepRetry) name -> retry
-          else { errors = errorsBefore; name -> ts }
-        }
-      }
-      pass += 1
-    }
-    // ISOLATED RERUN (r11 verdict: 13 queries still carried max > 2×min
-    // in the committed artifact — the exact graph trio's multi-GB
-    // allocations leave GC debt that in-context reruns keep re-paying).
-    // Any query STILL noisy after the in-context guard passes is
-    // re-measured in a FRESH JVM subprocess (the run_isolated.sh
-    // discipline, in-process): same classpath (run/fork gives a real
-    // java.class.path), same JVM flags (--add-opens/-Xmx/-D from the
-    // parent's RuntimeMXBean), SPARK_GRAFT_ONLY=<query>. The child's
-    // times are kept under the SAME lower-median / tighter-spread rule
-    // as load reruns, and the names are listed under
-    // "isolated_reruns" so the correction is visible. Only full-suite
-    // runs isolate (a child never recurses — its `only` is set), and
-    // the count is capped so a pathological day can't double the
-    // bench's wall-clock.
-    val isolateCap =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_ISOLATE_MAX", "24").toInt
-    val isolatedReruns = scala.collection.mutable.ListBuffer.empty[String]
-    def isolatedTimes(name: String): Option[Seq[Double]] = {
-      import scala.jdk.CollectionConverters._
-      val rt = java.lang.management.ManagementFactory.getRuntimeMXBean
-    // keep module opens, heap sizing, and -D props; drop agent/debug
-      val jvmArgs = rt.getInputArguments.asScala.filter(a =>
-        a.startsWith("--add-opens=") || a.startsWith("-Xmx") ||
-          a.startsWith("-Xms") || a.startsWith("-D"))
-      val javaBin = Paths.get(sys.props("java.home"), "bin", "java").toString
-      val cmd = (Seq(javaBin) ++ jvmArgs ++
-        Seq("-cp", sys.props("java.class.path"), "graft.Bench")).asJava
-      val pb = new ProcessBuilder(cmd)
-      pb.environment().put("SPARK_GRAFT_ONLY", name)
-      // EXACT match (r12 advice): ONLY is a prefix filter, so without
-      // this the q_graph_pagerank child also ran q_graph_pagerank_lsh
-      // (2-3× the intended wall-clock, tripping the 20-min kill and
-      // silently keeping the noisy numbers while burning a cap slot).
-      pb.environment().put("SPARK_GRAFT_ONLY_EXACT", "1")
-      // The child runs right after the full sweep, when 1-min loadavg
-      // is still decaying from the sweep itself — give its start gate
-      // a shorter bounded wait than the parent's 600 s so a dozen
-      // isolated reruns can't stall the artifact for an hour.
-      pb.environment().put("SPARK_GRAFT_BENCH_MAX_WAIT_SEC",
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_ISO_WAIT_SEC", "180"))
-      pb.redirectErrorStream(true)
-      pb.redirectOutput(new java.io.File("/dev/null"))
-      Files.deleteIfExists(Paths.get("BENCH_LOCAL_PARTIAL.json"))
-      val p = pb.start()
-      val done = p.waitFor(20, java.util.concurrent.TimeUnit.MINUTES)
-      if (!done) { p.destroyForcibly(); return None }
-      val f = Paths.get("BENCH_LOCAL_PARTIAL.json")
-      if (!Files.exists(f)) return None
-      val txt = Files.readString(f)
-      // Find the query's [min,med,max] triple ANYWHERE in the child
-      // artifact (r12 advice: the head-anchored "spread":{"<name>":
-      // form only matched when the target sorted first in the child's
-      // map — true only by accident of the prefix bug). The exact-match
-      // child has exactly one query, and only spread values are
-      // bracketed arrays keyed by a query name.
-      val re = ("\"" + java.util.regex.Pattern.quote(name) +
-        "\":\\[([^\\]]*)\\]").r
-      re.findFirstMatchIn(txt).map(
-        _.group(1).split(",").toSeq.map(_.trim.toDouble).sorted)
-    }
-    // The known multi-GB EXACT BASELINES (labeled recall baselines whose
-    // scale twins are the 100 TB path) are isolated UNCONDITIONALLY
-    // (r12 verdict task 2, third attempt at the spread bar): their
-    // allocations leave GC debt that no in-context rerun escapes — the
-    // same five names carried max > 2×min spreads for three rounds.
-    val alwaysIsolate = Set(
-      "q_graph_pagerank", "q_graph_triangles", "q_graph_clustering_coeff",
-      "q_graph_label_prop", "q_sim_containment", "q_sim_semdedup")
-    if (!filtered) {
-      results = results.map { case (name, ts) =>
-        val want = isNoisy(ts) || (alwaysIsolate(name) && ts.nonEmpty)
-        if (!want || isolatedReruns.size >= isolateCap) name -> ts
-        else {
-          isolatedReruns += name
-          isolatedTimes(name) match {
-            case Some(iso) if iso.nonEmpty =>
-              def ratio(s: Seq[Double]) =
-                if (s.size >= 2 && s.head > 0) s.last / s.head
-                else Double.MaxValue
-              val keepIso =
-                if (med(iso) < med(ts) * 0.9) true
-                else if (med(ts) < med(iso) * 0.9) false
-                else ratio(iso) <= ratio(ts)
-              if (keepIso) name -> iso else name -> ts
-            case _ => name -> ts
           }
         }
+        val first = once()
+        val rest = first match {
+          case Some(r) if r.wall < RerunMaxSec =>
+            (2 to Runs).flatMap { _ => if (r.wall > 2.0) System.gc(); once() }
+          case _ => Nil
+        }
+        spark.sharedState.cacheManager.clearCache()
+        name -> (first.toSeq ++ rest)
       }
-    }
-    val loadEnd = loadavg1m
-    def jq(s: String) = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
-    // "queries" stays name -> MEDIAN (the driver's parse contract);
-    // "spread" carries name -> [min, median, max] so machine-load
-    // variance is visible in the artifact (r3-r5: 74.6/82.6/108.5 s
-    // totals on byte-identical code, invisible with a single number).
-    val medians = results.map { case (name, ts) =>
-      name -> (if (ts.isEmpty) -1.0 else ts(ts.size / 2))
-    }
-    val qs = medians.map { case (k, v) => s"${jq(k)}:$v" }.mkString("{", ",", "}")
-    val spread = results.collect { case (name, ts) if ts.nonEmpty =>
-      s"${jq(name)}:[${ts.head},${ts(ts.size / 2)},${ts.last}]"
-    }.mkString("{", ",", "}")
-    val firstJson = results.collect { case (name, ts) if ts.nonEmpty =>
-      s"${jq(name)}:${firsts.getOrElse(name, -1.0)}"
-    }.mkString("{", ",", "}")
-    // A query with kept (non-empty) times succeeded for artifact
-    // purposes — a transient failure in one extra run must not list it
-    // under "errors" next to a valid median.
-    val timedOk = results.collect { case (n, ts) if ts.nonEmpty => n }.toSet
-    errors = errors.filter { case (n, _) => !timedOk(n) }
-    val errJson = errors.map { case (k, v) => s"${jq(k)}:${jq(v)}" }.mkString("{", ",", "}")
-    val total = medians.collect { case (_, v) if v >= 0 => v }.sum
-    // distinct: with guardPasses > 1, a query that stays noisy is
-    // appended once per pass — the artifact should list it once.
-    val rerunsJson = loadReruns.distinct.map(jq).mkString("[", ",", "]")
-    val isoJson = isolatedReruns.distinct.map(jq).mkString("[", ",", "]")
-    // Per-family subtotals (Queries.family: parity / twin / extension)
-    // so the artifact separates §2-coverage cost from the extension
-    // library's — the suite grows ~5 queries/round and a single total
-    // stops being readable.
-    val famJson = medians.filter(_._2 >= 0)
-      .groupBy { case (n, _) => Queries.family(n) }.toSeq.sortBy(_._1)
-      .map { case (fam, qs2) =>
-        s"${jq(fam)}:{" + s""""n":${qs2.size},"sec":${qs2.map(_._2).sum}}"""
-      }.mkString("{", ",", "}")
-    val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"first":$firstJson,"errors":$errJson,"runs":$runs,"loadavg":[$loadStart,$loadEnd],"load_waited_sec":$waited,"load_reruns":$rerunsJson,"isolated_reruns":$isoJson,"families":$famJson,"sf":${jq(sfDir)}}"""
-    // A filtered run must not clobber the committed full-suite numbers
-    // (a targeted SPARK_GRAFT_ONLY run once overwrote BENCH_LOCAL.json
-    // with a single query's line).
     val outFile =
-      if (!filtered) "BENCH_LOCAL.json" else "BENCH_LOCAL_PARTIAL.json"
+      if (Queries.filtered) "BENCH_LOCAL_PARTIAL.json" else "BENCH_LOCAL.json"
+    val (line, compact) =
+      render(results, errors, (loadStart, loadavg1m), sfDir, outFile)
     Files.writeString(Paths.get(outFile), line + "\n")
-    // The driver captures only the TAIL of stdout; r2 and r3 both
-    // recorded "parsed": null because the full per-query line (~5 KB at
-    // 98 queries) had its head truncated out of the capture window.
-    // So the LAST line is a compact summary guaranteed to fit (~1 KB):
-    // total + the slowest queries + error/query counts. The full
-    // per-query map lives in BENCH_LOCAL.json (committed) and in the
-    // full line printed just above the summary.
-    val slowest = medians.filter(_._2 >= 0).sortBy(-_._2).take(15)
-    val qsTop = slowest.map { case (k, v) => s"${jq(k)}:$v" }.mkString("{", ",", "}")
-    val compact =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsTop,"n_queries":${results.size},"n_errors":${errors.size},"runs":$runs,"loadavg":[$loadStart,$loadEnd],"sf":${jq(sfDir)},"detail":${jq(outFile)}}"""
     spark.stop()
-    // Last stdout lines of the whole process (driver parses the tail).
     println(line)
     println(compact)
+  }
+
+  /** The full artifact line and the compact tail line, from each query's
+    * successful runs in chronological order (a query whose first run
+    * failed has none) and the last error of each query. A query with
+    * kept runs is never listed under "errors"; one without is -1.0 in
+    * "queries".
+    */
+  private[graft] def render(results: Seq[(String, Seq[Run])],
+      errors: Map[String, String], loadavg: (Double, Double), sfDir: String,
+      outFile: String): (String, String) = {
+    def j(s: String) = Verify.jsonString(s)
+    def obj(kvs: Seq[(String, Any)]) =
+      kvs.map { case (k, v) => s"${j(k)}:$v" }.mkString("{", ",", "}")
+    def med(xs: Seq[Double]) = xs.sorted.apply(xs.size / 2)
+    val kept = results.map { case (n, rs) =>
+      (n, rs, if (rs.size >= 3) rs.drop(1) else rs)
+    }
+    val timed = kept.filter(_._3.nonEmpty)
+    def perQuery(f: Seq[Run] => Any) = obj(timed.map(t => t._1 -> f(t._3)))
+    val medians =
+      kept.map(t => t._1 -> (if (t._3.isEmpty) -1.0 else med(t._3.map(_.wall))))
+    val ok = medians.filter(_._2 >= 0)
+    val total = ok.map(_._2).sum
+    val timedNames = timed.map(_._1).toSet
+    val errs = errors.toSeq.sorted.filterNot(e => timedNames(e._1))
+    val families = ok.groupBy(kv => Queries.family(kv._1)).toSeq.sortBy(_._1)
+      .map { case (f, qs) => f -> s"""{"n":${qs.size},"sec":${qs.map(_._2).sum}}""" }
+    val spread = perQuery { ks =>
+      val w = ks.map(_.wall).sorted
+      s"[${w.head},${med(w)},${w.last}]"
+    }
+    val first = obj(timed.map(t => t._1 -> t._2.head.wall))
+    val cpu = perQuery(ks => med(ks.map(_.cpu)))
+    val gc = perQuery(ks => med(ks.map(_.gc)))
+    val la = s"[${loadavg._1},${loadavg._2}]"
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(medians)},"spread":$spread,"first":$first,"cpu":$cpu,"gc":$gc,"errors":${obj(errs.map(e => e._1 -> j(e._2)))},"runs":$Runs,"loadavg":$la,"families":${obj(families)},"sf":${j(sfDir)}}"""
+    val top = obj(ok.sortBy(-_._2).take(15))
+    val compact = s"""{"metric":"total","value":$total,"unit":"sec","queries":$top,"n_queries":${results.size},"n_errors":${errs.size},"runs":$Runs,"loadavg":$la,"sf":${j(sfDir)},"detail":${j(outFile)}}"""
+    (line, compact)
   }
 }

@@ -72,11 +72,10 @@ object Queries {
   /** Shared Verify/Bench query-selection filter.
     *  - SPARK_GRAFT_ONLY=p1,p2 — prefix filter (the long-standing
     *    local-iteration contract; the driver never sets it);
-    *  - SPARK_GRAFT_ONLY_EXACT=1 — makes ONLY exact-name: the Bench
-    *    isolated-rerun child sets this, because isolating
-    *    q_graph_pagerank must not also run q_graph_pagerank_lsh (the
-    *    r12 advice: prefix children ran 2-3× the intended work and
-    *    tripped the 20-min kill, silently keeping noisy numbers);
+    *  - SPARK_GRAFT_ONLY_EXACT=1 — makes ONLY exact-name:
+    *    `tools/run_isolated.sh` sets this, because timing
+    *    q_text_quality_prune alone must not also run
+    *    q_text_quality_prune_approx in the same JVM;
     *  - SPARK_GRAFT_FAMILY=parity|twin|extension — family filter, so a
     *    §2-regression check costs the parity family's ~30 s, not the
     *    full suite (documented in README).
@@ -93,7 +92,7 @@ object Queries {
   }
 
   /** True when any selection filter is active — a filtered Bench run
-    * must neither clobber BENCH_LOCAL.json nor recurse into isolation.
+    * must not clobber BENCH_LOCAL.json.
     */
   def filtered: Boolean =
     sys.env.contains("SPARK_GRAFT_ONLY") ||

@@ -19,23 +19,27 @@ object Verify {
     // never pairs an oracle with an output left over from an earlier run.
     SparkEntry.queries.filter(kv => Queries.selected(kv._1))
       .foreach { case (name, fn) => dump(spark, sfDir, outDir, name, fn) }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql.filter(kv => Queries.selected(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
+
+  /** A JSON string literal: escapes the quote, the backslash and ALL
+    * control chars (< 0x20). A tab or CR in oracle SQL would otherwise
+    * make `json.load` of oracle_sql.json fail, and with it every oracle
+    * compare. Shared by Verify and Bench.
+    */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
   /** Writes one query's result to `$outDir/$name` as a single parquet
     * file. Any earlier output there is deleted first, and a failed

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 import graft.operators.Salt
 import graft.sources.{Lake, Tables}
 
@@ -167,6 +168,55 @@ class InfraSpec extends AnyFunSuite {
     assert(!Files.exists(stale), "stale output survived a failed query")
     assert(Verify.dump(spark, sf, out, "q_ok", (s, _) => s.range(3).toDF()))
     assert(new java.io.File(out, "q_ok").list().exists(_.endsWith(".parquet")))
+  }
+
+  test("jsonString escapes quote, backslash and control chars so Jackson reads them back") {
+    val raw = "a\"b\\c\nd\re\tf\u0001g"
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    assert(json.readValue(Verify.jsonString(raw), classOf[String]) == raw)
+  }
+
+  test("Bench.render: warm medians, spreads, cpu/gc and errors in the artifact contract") {
+    import Bench.Run
+    val results = Seq(
+      // chronological: cold 5.0, then warm 1.0, 3.0, 2.0
+      "q_a" -> Seq(Run(5.0, 9.0, 0.5), Run(1.0, 4.0, 0.1),
+        Run(3.0, 6.0, 0.3), Run(2.0, 5.0, 0.2)),
+      "q_b" -> Seq.empty[Run],
+      "q_c" -> Seq(Run(1.5, 2.0, 0.0), Run(0.5, 1.0, 0.0)))
+    val errors = Map("q_b" -> "java.lang.Error: \"boom\"",
+      "q_c" -> "a rerun failed")
+    val (line, compact) =
+      Bench.render(results, errors, (0.5, 1.5), "/sf", "BENCH_LOCAL.json")
+    val m = new com.fasterxml.jackson.databind.ObjectMapper()
+    val full = m.readTree(line)
+    assert(full.fieldNames.asScala.toSeq == Seq("metric", "value", "unit",
+      "queries", "spread", "first", "cpu", "gc", "errors", "runs",
+      "loadavg", "families", "sf"))
+    val q = full.get("queries")
+    // the warm median, not the smallest run and not the cold-inclusive one
+    assert(q.get("q_a").asDouble == 2.0)
+    assert(q.get("q_b").asDouble == -1.0)
+    assert(q.get("q_c").asDouble == 1.5) // 2 runs: none dropped, upper median
+    def arr(n: com.fasterxml.jackson.databind.JsonNode) =
+      (0 until n.size).map(n.get(_).asDouble)
+    assert(arr(full.get("spread").get("q_a")) == Seq(1.0, 2.0, 3.0))
+    assert(arr(full.get("spread").get("q_c")) == Seq(0.5, 1.5, 1.5))
+    assert(!full.get("spread").has("q_b"))
+    assert(full.get("first").get("q_a").asDouble == 5.0)
+    assert(full.get("cpu").get("q_a").asDouble == 5.0)
+    assert(full.get("gc").get("q_a").asDouble == 0.2)
+    // kept times win over a recorded error; none at all means an error
+    assert(full.get("errors").size == 1)
+    assert(full.get("errors").get("q_b").asText == "java.lang.Error: \"boom\"")
+    assert(full.get("value").asDouble == 3.5)
+    assert(arr(full.get("loadavg")) == Seq(0.5, 1.5))
+    val tail = m.readTree(compact)
+    assert(tail.fieldNames.asScala.toSeq == Seq("metric", "value", "unit",
+      "queries", "n_queries", "n_errors", "runs", "loadavg", "sf", "detail"))
+    assert(tail.get("queries").fieldNames.asScala.toSeq == Seq("q_a", "q_c"))
+    assert(tail.get("n_queries").asInt == 3 && tail.get("n_errors").asInt == 1)
+    assert(tail.get("detail").asText == "BENCH_LOCAL.json")
   }
 
   test("Tables.spread hash-spreads a one-partition scan by its key and leaves a wide scan alone") {

@@ -5,6 +5,10 @@
 # Appends one JSON line per run to $OUT.
 set -u
 OUT=${OUT:-/tmp/isolated_runs.jsonl}
+# SPARK_GRAFT_ONLY is a prefix filter: without exact matching,
+# `run ... q_text_quality_prune` would also time
+# q_text_quality_prune_approx in the same JVM.
+export SPARK_GRAFT_ONLY_EXACT=1
 : > "$OUT"
 run() {
   local sfdir=$1 q=$2
