@@ -1,6 +1,8 @@
 package graft
 import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.TimeUnit
+import com.fasterxml.jackson.databind.ObjectMapper
 import scala.jdk.CollectionConverters._
 
 /** Benchmark main. Runs every selected SparkEntry query through the noop
@@ -28,13 +30,18 @@ import scala.jdk.CollectionConverters._
   *    intermediates, and a sweep's worth of never-unpersisted frames
   *    turned the storage pool into GC pressure that inflated later
   *    queries 2-3× (r3: q_corpus_clean 23.5 s in-sweep vs 7.0 s alone).
+  *  - A query whose warm max exceeds [[SpreadBar]] × its warm min is
+  *    timed once more, alone, in a fresh JVM (this main with an
+  *    exact-name filter), after the sweep's session has stopped. Its
+  *    numbers replace the in-sweep ones, whose spread is kept under
+  *    "reruns". A one-query run is already alone, so it reruns nothing
+  *    and a child never recurses.
   *
   * Load is made visible instead of re-measured away: "cpu" is the warm
   * median of process CPU seconds per run and "gc" the warm median of GC
   * seconds per run (summed over all collectors). Ambient load shows as
   * wall time far above CPU time, a neighbour's GC debt as GC seconds.
-  * "loadavg" records the 1-min load at start and end. For a query timed
-  * alone in a fresh JVM, use `tools/run_isolated.sh`.
+  * "loadavg" records the 1-min load at start and end.
   *
   * The full line and then a compact summary (total, the 15 slowest
   * medians, counts) are the last two stdout writes, after
@@ -47,9 +54,27 @@ object Bench {
   val Runs = 4
   /** A query whose first run takes this many seconds is not re-run. */
   val RerunMaxSec = 20.0
+  /** Warm max over warm min above which a query is re-timed alone. */
+  val SpreadBar = 2.0
 
   /** One noop-sink run: wall, process CPU and GC seconds. */
   private[graft] case class Run(wall: Double, cpu: Double, gc: Double)
+  /** A query's committed numbers: the cold wall seconds, the warm
+    * [min, median, max] wall seconds and the warm median CPU and GC
+    * seconds.
+    */
+  private[graft] case class Stats(first: Double, min: Double, median: Double,
+    max: Double, cpu: Double, gc: Double)
+
+  /** Stats of a query's successful runs in chronological order (None when
+    * it has none). With 3 or more runs the cold first is dropped.
+    */
+  private[graft] def stats(runs: Seq[Run]): Option[Stats] = runs.headOption.map { cold =>
+    val kept = if (runs.size >= 3) runs.drop(1) else runs
+    def med(xs: Seq[Double]) = xs.sorted.apply(xs.size / 2)
+    val w = kept.map(_.wall).sorted
+    Stats(cold.wall, w.head, med(w), w.last, med(kept.map(_.cpu)), med(kept.map(_.gc)))
+  }
 
   private val osBean = ManagementFactory.getOperatingSystemMXBean
     .asInstanceOf[com.sun.management.OperatingSystemMXBean]
@@ -57,9 +82,32 @@ object Bench {
   private def gcSec: Double = ManagementFactory.getGarbageCollectorMXBeans
     .asScala.map(_.getCollectionTime.max(0L)).sum / 1e3
   private def loadavg1m: Double =
-    try Files.readString(Paths.get("/proc/loadavg")).trim
-      .split("\\s+")(0).toDouble
+    try Files.readString(Paths.get("/proc/loadavg")).trim.split("\\s+")(0).toDouble
     catch { case _: Throwable => -1.0 }
+
+  /** Times `name` alone: this main in a child JVM with the same class
+    * path, module opens, heap and -D flags, filtered to exactly `name`.
+    * None when the child fails, has no kept times or runs past 20 min.
+    */
+  private def alone(name: String): Option[Stats] = {
+    val jvm = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+      .filter(a => Seq("--add-opens=", "-Xm", "-D").exists(a.startsWith))
+    val cmd = Seq(Paths.get(sys.props("java.home"), "bin", "java").toString) ++
+      jvm ++ Seq("-cp", sys.props("java.class.path"), "graft.Bench")
+    val pb = new ProcessBuilder(cmd.asJava).redirectErrorStream(true)
+      .redirectOutput(ProcessBuilder.Redirect.DISCARD)
+    pb.environment().put("SPARK_GRAFT_ONLY", name)
+    pb.environment().put("SPARK_GRAFT_ONLY_EXACT", "1")
+    val out = Paths.get("BENCH_LOCAL_PARTIAL.json")
+    Files.deleteIfExists(out)
+    val p = pb.start()
+    if (!p.waitFor(20, TimeUnit.MINUTES)) p.destroyForcibly()
+    Option.when(Files.exists(out))(new ObjectMapper().readTree(out.toFile)).flatMap { t =>
+      def at(k: String) = t.get(k).get(name).asDouble
+      Option(t.get("spread").get(name)).map(s => Stats(at("first"),
+        s.get(0).asDouble, s.get(1).asDouble, s.get(2).asDouble, at("cpu"), at("gc")))
+    }
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -72,72 +120,58 @@ object Bench {
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     val loadStart = loadavg1m
     var errors = Map.empty[String, String]
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
+    val swept = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(kv => Queries.selected(kv._1)).map { case (name, fn) =>
         def once(): Option[Run] = {
           val (c0, g0, t0) = (cpuSec, gcSec, System.nanoTime())
           try {
             fn(spark, sfDir).write.format("noop").mode("overwrite").save()
             Some(Run((System.nanoTime() - t0) / 1e9, cpuSec - c0, gcSec - g0))
-          } catch { case e: Throwable =>
-            errors += name -> e.toString.take(200)
-            None
-          }
+          } catch { case e: Throwable => errors += name -> e.toString.take(200); None }
         }
         val first = once()
-        val rest = first match {
-          case Some(r) if r.wall < RerunMaxSec =>
-            (2 to Runs).flatMap { _ => if (r.wall > 2.0) System.gc(); once() }
-          case _ => Nil
-        }
+        val rest = first.filter(_.wall < RerunMaxSec).toSeq.flatMap(r =>
+          (2 to Runs).flatMap { _ => if (r.wall > 2.0) System.gc(); once() })
         spark.sharedState.cacheManager.clearCache()
-        name -> (first.toSeq ++ rest)
+        name -> stats(first.toSeq ++ rest)
       }
-    val outFile =
-      if (Queries.filtered) "BENCH_LOCAL_PARTIAL.json" else "BENCH_LOCAL.json"
-    val (line, compact) =
-      render(results, errors, (loadStart, loadavg1m), sfDir, outFile)
-    Files.writeString(Paths.get(outFile), line + "\n")
     spark.stop()
+    System.gc() // shrink this JVM's heap before a child JVM starts
+    val reruns = swept.collect { case (n, Some(s)) if swept.size > 1 &&
+      s.max > SpreadBar * s.min => alone(n).map(n -> (s, _)) }.flatten
+    val results = swept.map { case (n, s) => n -> reruns.toMap.get(n).map(_._2).orElse(s) }
+    val outFile = if (Queries.filtered) "BENCH_LOCAL_PARTIAL.json" else "BENCH_LOCAL.json"
+    val (line, compact) = render(results, reruns.map(r => r._1 -> r._2._1),
+      errors, (loadStart, loadavg1m), sfDir, outFile)
+    Files.writeString(Paths.get(outFile), line + "\n")
     println(line)
     println(compact)
   }
 
   /** The full artifact line and the compact tail line, from each query's
-    * successful runs in chronological order (a query whose first run
-    * failed has none) and the last error of each query. A query with
-    * kept runs is never listed under "errors"; one without is -1.0 in
-    * "queries".
+    * stats, the in-sweep stats that a fresh-JVM rerun replaced, and the
+    * last error of each query. A query with stats is never listed under
+    * "errors"; one without is -1.0 in "queries".
     */
-  private[graft] def render(results: Seq[(String, Seq[Run])],
-      errors: Map[String, String], loadavg: (Double, Double), sfDir: String,
+  private[graft] def render(results: Seq[(String, Option[Stats])],
+      reruns: Seq[(String, Stats)], errors: Map[String, String],
+      loadavg: (Double, Double), sfDir: String,
       outFile: String): (String, String) = {
     def j(s: String) = Verify.jsonString(s)
     def obj(kvs: Seq[(String, Any)]) =
       kvs.map { case (k, v) => s"${j(k)}:$v" }.mkString("{", ",", "}")
-    def med(xs: Seq[Double]) = xs.sorted.apply(xs.size / 2)
-    val kept = results.map { case (n, rs) =>
-      (n, rs, if (rs.size >= 3) rs.drop(1) else rs)
-    }
-    val timed = kept.filter(_._3.nonEmpty)
-    def perQuery(f: Seq[Run] => Any) = obj(timed.map(t => t._1 -> f(t._3)))
-    val medians =
-      kept.map(t => t._1 -> (if (t._3.isEmpty) -1.0 else med(t._3.map(_.wall))))
+    def spreads(ss: Seq[(String, Stats)]) =
+      obj(ss.map { case (n, s) => n -> s"[${s.min},${s.median},${s.max}]" })
+    val timed = results.collect { case (n, Some(s)) => n -> s }
+    def perQuery(f: Stats => Double) = obj(timed.map(t => t._1 -> f(t._2)))
+    val medians = results.map(t => t._1 -> t._2.fold(-1.0)(_.median))
     val ok = medians.filter(_._2 >= 0)
     val total = ok.map(_._2).sum
-    val timedNames = timed.map(_._1).toSet
-    val errs = errors.toSeq.sorted.filterNot(e => timedNames(e._1))
+    val errs = errors.toSeq.sorted.filterNot(e => timed.exists(_._1 == e._1))
     val families = ok.groupBy(kv => Queries.family(kv._1)).toSeq.sortBy(_._1)
       .map { case (f, qs) => f -> s"""{"n":${qs.size},"sec":${qs.map(_._2).sum}}""" }
-    val spread = perQuery { ks =>
-      val w = ks.map(_.wall).sorted
-      s"[${w.head},${med(w)},${w.last}]"
-    }
-    val first = obj(timed.map(t => t._1 -> t._2.head.wall))
-    val cpu = perQuery(ks => med(ks.map(_.cpu)))
-    val gc = perQuery(ks => med(ks.map(_.gc)))
     val la = s"[${loadavg._1},${loadavg._2}]"
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(medians)},"spread":$spread,"first":$first,"cpu":$cpu,"gc":$gc,"errors":${obj(errs.map(e => e._1 -> j(e._2)))},"runs":$Runs,"loadavg":$la,"families":${obj(families)},"sf":${j(sfDir)}}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(medians)},"spread":${spreads(timed)},"first":${perQuery(_.first)},"cpu":${perQuery(_.cpu)},"gc":${perQuery(_.gc)},"reruns":${spreads(reruns)},"errors":${obj(errs.map(e => e._1 -> j(e._2)))},"runs":$Runs,"loadavg":$la,"families":${obj(families)},"sf":${j(sfDir)}}"""
     val top = obj(ok.sortBy(-_._2).take(15))
     val compact = s"""{"metric":"total","value":$total,"unit":"sec","queries":$top,"n_queries":${results.size},"n_errors":${errs.size},"runs":$Runs,"loadavg":$la,"sf":${j(sfDir)},"detail":${j(outFile)}}"""
     (line, compact)

@@ -72,9 +72,9 @@ object Queries {
   /** Shared Verify/Bench query-selection filter.
     *  - SPARK_GRAFT_ONLY=p1,p2 — prefix filter (the long-standing
     *    local-iteration contract; the driver never sets it);
-    *  - SPARK_GRAFT_ONLY_EXACT=1 — makes ONLY exact-name:
-    *    `tools/run_isolated.sh` sets this, because timing
-    *    q_text_quality_prune alone must not also run
+    *  - SPARK_GRAFT_ONLY_EXACT=1 — makes ONLY exact-name: Bench's
+    *    fresh-JVM rerun child and `tools/run_isolated.sh` set this,
+    *    because timing q_text_quality_prune alone must not also run
     *    q_text_quality_prune_approx in the same JVM;
     *  - SPARK_GRAFT_FAMILY=parity|twin|extension — family filter, so a
     *    §2-regression check costs the parity family's ~30 s, not the

@@ -176,22 +176,25 @@ class InfraSpec extends AnyFunSuite {
     assert(json.readValue(Verify.jsonString(raw), classOf[String]) == raw)
   }
 
-  test("Bench.render: warm medians, spreads, cpu/gc and errors in the artifact contract") {
-    import Bench.Run
-    val results = Seq(
+  test("Bench.render: warm medians, spreads, cpu/gc, reruns and errors in the artifact contract") {
+    import Bench.{Run, Stats}
+    val runs = Seq(
       // chronological: cold 5.0, then warm 1.0, 3.0, 2.0
       "q_a" -> Seq(Run(5.0, 9.0, 0.5), Run(1.0, 4.0, 0.1),
         Run(3.0, 6.0, 0.3), Run(2.0, 5.0, 0.2)),
       "q_b" -> Seq.empty[Run],
       "q_c" -> Seq(Run(1.5, 2.0, 0.0), Run(0.5, 1.0, 0.0)))
+    val results = runs.map { case (n, rs) => n -> Bench.stats(rs) }
+    // q_c's in-sweep numbers, replaced by a fresh-JVM rerun
+    val reruns = Seq("q_c" -> Stats(9.0, 0.5, 1.25, 8.0, 1.0, 0.0))
     val errors = Map("q_b" -> "java.lang.Error: \"boom\"",
       "q_c" -> "a rerun failed")
     val (line, compact) =
-      Bench.render(results, errors, (0.5, 1.5), "/sf", "BENCH_LOCAL.json")
+      Bench.render(results, reruns, errors, (0.5, 1.5), "/sf", "BENCH_LOCAL.json")
     val m = new com.fasterxml.jackson.databind.ObjectMapper()
     val full = m.readTree(line)
     assert(full.fieldNames.asScala.toSeq == Seq("metric", "value", "unit",
-      "queries", "spread", "first", "cpu", "gc", "errors", "runs",
+      "queries", "spread", "first", "cpu", "gc", "reruns", "errors", "runs",
       "loadavg", "families", "sf"))
     val q = full.get("queries")
     // the warm median, not the smallest run and not the cold-inclusive one
@@ -203,6 +206,8 @@ class InfraSpec extends AnyFunSuite {
     assert(arr(full.get("spread").get("q_a")) == Seq(1.0, 2.0, 3.0))
     assert(arr(full.get("spread").get("q_c")) == Seq(0.5, 1.5, 1.5))
     assert(!full.get("spread").has("q_b"))
+    assert(full.get("reruns").fieldNames.asScala.toSeq == Seq("q_c"))
+    assert(arr(full.get("reruns").get("q_c")) == Seq(0.5, 1.25, 8.0))
     assert(full.get("first").get("q_a").asDouble == 5.0)
     assert(full.get("cpu").get("q_a").asDouble == 5.0)
     assert(full.get("gc").get("q_a").asDouble == 0.2)

@@ -1,8 +1,10 @@
 #!/bin/bash
-# Isolated single-query bench runs: one sbt/JVM per (sfdir, query), so a
-# heavy neighbor's GC debt cannot inflate the measurement (the same
+# Re-measures a fixed list of heavy sf0.1/sf1/sf10 queries (the list at
+# the bottom, at 32 cores and a 48g heap), each alone in its own sbt/JVM,
+# so a heavy neighbor's GC debt cannot inflate the measurement (the same
 # reason SCALING.md's drift investigation re-measured isolated).
-# Appends one JSON line per run to $OUT.
+# Appends one JSON line per run to $OUT. To time any one query alone:
+#   SPARK_GRAFT_ONLY=<query> SPARK_GRAFT_ONLY_EXACT=1 sbt 'runMain graft.Bench'
 set -u
 OUT=${OUT:-/tmp/isolated_runs.jsonl}
 # SPARK_GRAFT_ONLY is a prefix filter: without exact matching,
@@ -27,9 +29,11 @@ d = json.load(open("BENCH_LOCAL_PARTIAL.json"))
 # "first" = run 1 of the fresh JVM (the COLD-JIT mode); "queries" =
 # median of the runs (the WARM mode). SCALING.md round 12 measured the
 # two modes 2x apart at sf10 — emit BOTH so tables can name theirs.
+# "cpu"/"gc" are the warm medians of process CPU and GC seconds.
 print(json.dumps({"sf": sys.argv[1], "q": sys.argv[2],
                   "first": d.get("first", {}), "queries": d["queries"],
-                  "spread": d["spread"], "errors": d["errors"]}))
+                  "spread": d["spread"], "cpu": d.get("cpu", {}),
+                  "gc": d.get("gc", {}), "errors": d["errors"]}))
 EOF
   else
     echo "{\"sf\": \"$sfdir\", \"q\": \"$q\", \"error\": \"no output\"}" >> "$OUT"
